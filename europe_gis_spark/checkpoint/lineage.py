@@ -243,13 +243,6 @@ def compact_checkpoint(
     return n
 
 
-def reset_checkpoint(spark: SparkSession, ckpt_path: str) -> None:
-    """S13 collection-drop equivalent."""
-    import shutil
-
-    shutil.rmtree(ckpt_path, ignore_errors=True)
-
-
 def run_with_checkpoint(
     spark: SparkSession,
     units: DataFrame,

@@ -155,16 +155,6 @@ def admin_polygons() -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def country_borders() -> pd.DataFrame:
-    """ISO2-keyed country polygons (raster_processor.py:51-57)."""
-    return pd.DataFrame(
-        [
-            {"iso2": "AA", "geometry": wkb.encode_polygon([_rect(AA_X0, AA_Y0, AA_W, AA_H)])},
-            {"iso2": "BB", "geometry": wkb.encode_polygon([_rect(BB_X0, BB_Y0, BB_W, BB_H)])},
-        ]
-    )
-
-
 def settlements(seed: int = 42, n_cluster: int = 15, n_spread: int = 24) -> pd.DataFrame:
     """kNN targets: one dense cluster (hot cell) + spread points + one
     isolated point forcing ring expansion ≥3 (FIXTURES.md §6)."""

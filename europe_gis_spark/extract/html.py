@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
 import pandas as pd
 
 EXTRACTOR_VERSION = 1
@@ -95,20 +94,6 @@ def extract_host(url: str | None) -> str | None:
 # ---------------------------------------------------------------- pandas API
 # These operate on whole pandas Series (one Arrow batch) — the shapes used
 # inside F.pandas_udf / mapInPandas wrappers in operators/geo_join.py.
-
-
-def text_series(html: pd.Series) -> pd.Series:
-    return html.map(extract_text)
-
-
-def coords_frame(html: pd.Series, text: pd.Series) -> pd.DataFrame:
-    lats = np.full(len(html), np.nan)
-    lons = np.full(len(html), np.nan)
-    for i, (h, t) in enumerate(zip(html.tolist(), text.tolist())):
-        got = extract_coords(h, t)
-        if got is not None:
-            lats[i], lons[i] = got
-    return pd.DataFrame({"lat": lats, "lon": lons})
 
 
 def host_series(url: pd.Series) -> pd.Series:

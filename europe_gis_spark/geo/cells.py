@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from . import geom, wkb
+from . import geom
 
 BASE_SIZE = float(1 << 23)  # 8 388 608 m at res 0 — one cell spans Europe
 MAX_RES = 23  # finest cell = 1 m
@@ -75,11 +75,6 @@ def cell_bounds(cid) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     xmin = ix.astype(np.float64) * size
     ymin = iy.astype(np.float64) * size
     return xmin, ymin, xmin + size, ymin + size
-
-
-def cell_center(cid) -> tuple[np.ndarray, np.ndarray]:
-    xmin, ymin, xmax, ymax = cell_bounds(cid)
-    return (xmin + xmax) * 0.5, (ymin + ymax) * 0.5
 
 
 def parent(cid, res: int):
@@ -329,10 +324,6 @@ def cover_polygon(
     if not covers:
         return np.empty(0, dtype=np.int64)
     return np.unique(np.concatenate(covers))
-
-
-def cover_geom_wkb(wkb_bytes: bytes, res: int) -> np.ndarray:
-    return cover_polygon(wkb.polygon_parts(wkb.decode(wkb_bytes)), res)
 
 
 def adaptive_cover(

@@ -81,20 +81,18 @@ def assign_points(
     idx: PolyIndex,
     px: np.ndarray,
     py: np.ndarray,
-    boundary: str = "include",
     match: str = "last",
 ):
     """Assign each point to covering polygon id(s).
 
-    Returns (row_idx, poly_ordinal) int arrays. ``match`` selects the
-    overlap rule:
+    Returns (row_idx, poly_ordinal) int arrays. Points on a polygon's
+    boundary count as inside it (``ST_Intersects``). ``match`` selects
+    the overlap rule:
 
       * ``'last'`` (default) — highest ordinal wins per point. This is
         rasterio ``MergeAlg.replace`` semantics: each burn OVERWRITES
         earlier burns, so the last polygon in input order wins (G4,
         ``raster_processor.py:167-175``; value burns at ``:279-291``).
-      * ``'first'`` — lowest ordinal wins (kept for pipelines that
-        pre-sort polygons by priority descending).
       * ``'all'`` — every covering polygon, one pair per hit
         (MergeAlg.add overlap counting, G3, ``:176-188``).
 
@@ -102,8 +100,8 @@ def assign_points(
     by candidate set, then one ``points_in_polygon`` call per polygon over
     all its candidate points.
     """
-    if match not in ("last", "first", "all"):
-        raise ValueError(f"match must be 'last'|'first'|'all', got {match!r}")
+    if match not in ("last", "all"):
+        raise ValueError(f"match must be 'last'|'all', got {match!r}")
     n = len(px)
     if n == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int32)
@@ -122,7 +120,7 @@ def assign_points(
     out_polys: list[np.ndarray] = []
     for p, row_chunks in per_poly.items():
         rows = np.concatenate(row_chunks)
-        hit = geom.points_in_polygon(px[rows], py[rows], idx.parts[p], boundary)
+        hit = geom.points_in_polygon(px[rows], py[rows], idx.parts[p])
         got = rows[hit]
         if len(got):
             out_rows.append(got)
@@ -131,13 +129,11 @@ def assign_points(
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int32)
     rows = np.concatenate(out_rows)
     polys = np.concatenate(out_polys)
-    if match != "all":
+    if match == "last":
         order = np.lexsort((polys, rows))  # by row, then ordinal asc
         rows, polys = rows[order], polys[order]
+        # keep the final (highest-ordinal) entry per row
         keep = np.ones(len(rows), dtype=bool)
-        if match == "first":
-            keep[1:] = rows[1:] != rows[:-1]
-        else:  # 'last': keep the final (highest-ordinal) entry per row
-            keep[:-1] = rows[:-1] != rows[1:]
+        keep[:-1] = rows[:-1] != rows[1:]
         rows, polys = rows[keep], polys[keep]
     return rows.astype(np.int64), polys

@@ -52,11 +52,6 @@ def encode_multipolygon(parts: list[list[np.ndarray]]) -> bytes:
     return body + b"".join(encode_polygon(rings) for rings in parts)
 
 
-def encode_linestring(coords: np.ndarray) -> bytes:
-    coords = np.asarray(coords, dtype="<f8")
-    return struct.pack("<BII", _LE, WKB_LINESTRING, len(coords)) + coords.tobytes()
-
-
 def _read_header(buf: bytes, off: int) -> tuple[int, int, bool]:
     (bo,) = struct.unpack_from("<B", buf, off)
     little = bo == 1

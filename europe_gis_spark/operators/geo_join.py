@@ -2,9 +2,9 @@
 
 Pipeline (SURVEY.md §7.2 minimum slice):
 
-  pages scan → coordinate extraction (meta/text, Arrow-batched UDF)
-            → hostname-hint fallback (broadcast equi-join, J1)
-            → LAEA projection + cell id (numpy in the same UDF pass)
+  pages scan → coordinate extraction (meta/text regexes, JVM-side)
+            → hostname-hint fallback (dict in the UDF closure, J1)
+            → LAEA projection (numpy, one Arrow-batched UDF pass)
             → point-in-polygon against the broadcast PolyIndex
               (cell probe + exact ray-cast refine, J6)
             → groupBy(nuts_id).count() (G-agg)
@@ -35,78 +35,6 @@ from ..geo import cells as gcells
 from ..geo import index as gindex
 from ..geo import proj
 
-RESOLVED_FIELDS = (
-    "lat double, lon double, x double, y double, cell bigint, method string"
-)
-
-
-def resolve_pages(
-    spark: SparkSession,
-    pages: DataFrame,
-    host_hints: pd.DataFrame | None = None,
-    res: int = gcells.RES_DEFAULT,
-) -> DataFrame:
-    """Add (lat, lon, x, y, cell, method) to a pages DataFrame.
-
-    One ``mapInPandas`` pass does extraction + projection + cell id —
-    a single JVM↔Python Arrow crossing per batch. Hostname fallback is a
-    tiny dict carried inside the closure (broadcast by task serialization;
-    ≤ a few thousand entries) — rows with no signal keep nulls, they must
-    survive, not be dropped (FIXTURES.md §1).
-    """
-    hints = {}
-    if host_hints is not None and len(host_hints):
-        hints = {
-            r.host: (float(r.lat), float(r.lon)) for r in host_hints.itertuples()
-        }
-
-    # output only url + lang + computed fields — never ship the html
-    # payload back through Arrow
-    out_schema = "url string, lang string, " + RESOLVED_FIELDS
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            n = len(b)
-            lat = np.full(n, np.nan)
-            lon = np.full(n, np.nan)
-            method = np.array([None] * n, dtype=object)
-            htmls = b["html"].tolist()
-            texts = b["text"].tolist()
-            for i in range(n):
-                got = hx.extract_coords(htmls[i], texts[i])
-                if got is not None:
-                    lat[i], lon[i] = got
-                    method[i] = "inline"
-            if hints:
-                hosts = hx.host_series(b["url"])
-                for i, h in enumerate(hosts.tolist()):
-                    if method[i] is None and h in hints:
-                        lat[i], lon[i] = hints[h]
-                        method[i] = "host"
-            x, y = proj.forward(lon, lat)
-            ok = np.isfinite(x) & np.isfinite(y)
-            cell = np.where(
-                ok,
-                gcells.cell_id(np.where(ok, x, 0.0), np.where(ok, y, 0.0), res),
-                -1,
-            )
-            yield pd.DataFrame(
-                {
-                    "url": b["url"],
-                    "lang": b["lang"],
-                    "lat": lat,
-                    "lon": lon,
-                    "x": np.where(ok, x, np.nan),
-                    "y": np.where(ok, y, np.nan),
-                    "cell": cell.astype(np.int64),
-                    "method": method,
-                }
-            )
-
-    return pages.select("url", "lang", "html", "text").mapInPandas(
-        fn, schema=out_schema
-    )
-
 
 def build_polygon_index_bc(
     spark: SparkSession,
@@ -124,23 +52,40 @@ def build_polygon_index_bc(
     return spark.sparkContext.broadcast(idx)
 
 
+def _assign_batch(
+    idx, ids: np.ndarray, x: np.ndarray, y: np.ndarray, match: str = "last"
+):
+    """The one probe-and-fill body of every geo-tag batch.
+
+    ``ids`` is ``idx.poly_ids`` as an object array (made once per task,
+    not per batch). Non-finite points never reach the index. ``match='last'``
+    returns the poly-id column (None where nothing covers the point);
+    ``match='all'`` returns the (row, poly id) pairs of every hit."""
+    ok_idx = np.nonzero(np.isfinite(x) & np.isfinite(y))[0]
+    rows, ords = gindex.assign_points(idx, x[ok_idx], y[ok_idx], match=match)
+    if match == "all":
+        return ok_idx[rows], ids[ords]
+    poly = np.full(len(x), None, dtype=object)
+    poly[ok_idx[rows]] = ids[ords]
+    return poly
+
+
 def assign_polygons(
     resolved: DataFrame,
     idx_bc,
-    boundary: str = "include",
     match: str = "last",
     keep_cols: tuple[str, ...] = ("url",),
 ) -> DataFrame:
     """Exact point→polygon assignment via the broadcast index.
 
     Map-side only (no shuffle): each Arrow batch probes the index and
-    emits (keep_cols…, x, y, cell, poly_id). Unresolved / unmatched rows
-    emit poly_id = NULL so downstream can count coverage.
+    emits (keep_cols…, x, y, poly_id). Points on a polygon boundary
+    count as inside it. Unresolved / unmatched rows emit poly_id = NULL
+    so downstream can count coverage.
 
     ``match='last'`` (default) = reference MergeAlg.replace burn order
-    (last polygon wins, ``raster_processor.py:167-175``); ``'first'`` =
-    priority-ordered input; ``'all'`` = one row per covering polygon
-    (overlap counting, G3).
+    (last polygon wins, ``raster_processor.py:167-175``); ``'all'`` =
+    one row per covering polygon (overlap counting, G3).
     """
     in_cols = list(keep_cols) + ["x", "y"]
     out_schema = ", ".join(
@@ -150,43 +95,33 @@ def assign_polygons(
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx = idx_bc.value
+        ids = np.array(idx.poly_ids, dtype=object)
         for b in batches:
-            n = len(b)
-            poly = np.array([None] * n, dtype=object)
+            out = b[in_cols]
             x = b["x"].to_numpy(dtype=np.float64, na_value=np.nan)
             y = b["y"].to_numpy(dtype=np.float64, na_value=np.nan)
-            ok = np.isfinite(x) & np.isfinite(y)
-            if ok.any():
-                rows, ords = gindex.assign_points(
-                    idx, x[ok], y[ok], boundary=boundary, match=match
-                )
-                ok_idx = np.nonzero(ok)[0]
-                if match != "all":
-                    for r, o in zip(rows, ords):
-                        poly[ok_idx[r]] = idx.poly_ids[o]
-                else:
-                    # multi-match: emit one row per (point, polygon) pair
-                    out = b[in_cols].iloc[ok_idx[rows]].copy()
-                    out["poly_id"] = [idx.poly_ids[o] for o in ords]
-                    miss = np.ones(n, dtype=bool)
-                    miss[ok_idx[rows]] = False
-                    rest = b[in_cols][miss].copy()
-                    rest["poly_id"] = None
-                    yield pd.concat([out, rest], ignore_index=True)
-                    continue
-            out = b[in_cols].copy()
-            out["poly_id"] = poly
-            yield out
+            if match != "all":
+                yield out.assign(poly_id=_assign_batch(idx, ids, x, y, match))
+                continue
+            # multi-match: one row per (point, polygon) pair, then the misses
+            rows, pids = _assign_batch(idx, ids, x, y, match)
+            miss = np.ones(len(b), dtype=bool)
+            miss[rows] = False
+            yield pd.concat(
+                [out.iloc[rows].assign(poly_id=pids), out[miss].assign(poly_id=None)],
+                ignore_index=True,
+            )
 
     return resolved.mapInPandas(fn, schema=out_schema)
 
 
 # Java-regex twins of extract/html.py's _GEO_META_RE / _COORD_TEXT_RE —
-# the coordinate extraction is pure regex, so it can run JVM-side on
-# the (lossy-UTF-8-decoded) html: the ASCII patterns match byte-for-byte
+# the coordinate extraction is pure regex, so it runs JVM-side on the
+# (lossy-UTF-8-decoded) html: the ASCII patterns match byte-for-byte
 # the same set of documents (invalid sequences decode to U+FFFD, which
-# the patterns cannot match through), pinned by the both-paths-equal
-# pytest and the per-row numpy oracle in bench.assignment_match_rate.
+# the patterns cannot match through), pinned by the per-row
+# hx.extract_coords oracle in the brute-force pytest and in
+# bench.assignment_match_rate.
 GEO_META_JAVA = (
     r'(?i)<meta\s+name="geo\.position"\s+content="\s*'
     r'(-?\d+(?:\.\d+)?)\s*;\s*(-?\d+(?:\.\d+)?)\s*"'
@@ -216,22 +151,18 @@ def tag_pages(
     pages: DataFrame,
     idx_bc,
     host_hints: pd.DataFrame | None = None,
-    boundary: str = "include",
     with_metrics: bool = False,
-    jvm_extract: bool = True,
 ) -> DataFrame:
     """Single-pass geo-tag: extraction + projection + PIP assignment in
-    ONE mapInPandas (one JVM↔Python Arrow crossing; only ``url`` and the
-    tiny computed columns come back — the html payload never makes a
-    round trip). This is the hot path the pages/sec metric measures.
+    ONE mapInPandas (one JVM↔Python Arrow crossing). This is the hot
+    path the pages/sec metric measures.
 
-    ``jvm_extract=True`` (default) runs the coordinate regexes JVM-side
-    (``_jvm_coords``) so the html payload never crosses Arrow AT ALL —
-    the Python pass receives (url, lat, lon[, text]) ≈ tens of bytes per
-    page instead of the KB-scale html. On a bandwidth-bound executor the
-    Arrow transfer was the plain variant's dominant cost; the legacy
-    all-Python path is kept (``jvm_extract=False``) and pinned equal
-    row-for-row by pytest.
+    The coordinate regexes run JVM-side (``_jvm_coords``), so the html
+    payload never crosses Arrow: the Python pass receives (url, lat,
+    lon[, text]) ≈ tens of bytes per page instead of the KB-scale html,
+    and only ``url`` and the tiny computed columns come back. Pages with
+    no coordinates fall back to the host hint; with neither they keep
+    x, y and poly_id NULL (they survive, never dropped).
 
     ``with_metrics=True`` additionally computes the per-page
     training-data metrics in the same pass (token count + 64-bit SimHash
@@ -249,69 +180,16 @@ def tag_pages(
     schema = "url string, poly_id string, x double, y double"
     if with_metrics:
         schema += ", n_tokens int, simhash long"
-
-    if jvm_extract:
-        jlat, jlon = _jvm_coords(pages)
-        cols = ["url", jlat.alias("lat"), jlon.alias("lon")] + (
-            ["text"] if with_metrics else []
-        )
-        src = pages.select(*cols)
-
-        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            idx = idx_bc.value
-            for b in batches:
-                n = len(b)
-                lat = b["lat"].to_numpy(dtype=np.float64, na_value=np.nan)
-                lon = b["lon"].to_numpy(dtype=np.float64, na_value=np.nan)
-                if with_metrics:
-                    texts = b["text"].tolist()
-                    ntok = np.array(
-                        [len((t or "").split()) for t in texts], dtype=np.int32
-                    )
-                    sims = simhash_batch(texts)
-                if hints:
-                    miss = np.isnan(lat)
-                    if miss.any():
-                        hosts = hx.host_series(b["url"])
-                        for i in np.nonzero(miss)[0]:
-                            h = hosts.iat[i]
-                            if h in hints:
-                                lat[i], lon[i] = hints[h]
-                x, y = proj.forward(lon, lat)
-                ok = np.isfinite(x) & np.isfinite(y)
-                poly = np.array([None] * n, dtype=object)
-                if ok.any():
-                    rows, ords = gindex.assign_points(
-                        idx, x[ok], y[ok], boundary=boundary, match="last"
-                    )
-                    ok_idx = np.nonzero(ok)[0]
-                    for r, o in zip(rows, ords):
-                        poly[ok_idx[r]] = idx.poly_ids[o]
-                out = {"url": b["url"], "poly_id": poly, "x": x, "y": y}
-                if with_metrics:
-                    out["n_tokens"] = ntok
-                    out["simhash"] = sims
-                yield pd.DataFrame(out)
-
-        return src.mapInPandas(fn, schema=schema)
+    jlat, jlon = _jvm_coords(pages)
+    cols = ["url", jlat.alias("lat"), jlon.alias("lon")]
+    src = pages.select(*cols, *(["text"] if with_metrics else []))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx = idx_bc.value
+        ids = np.array(idx.poly_ids, dtype=object)
         for b in batches:
-            n = len(b)
-            lat = np.full(n, np.nan)
-            lon = np.full(n, np.nan)
-            htmls = b["html"].tolist()
-            texts = b["text"].tolist()
-            for i in range(n):
-                got = hx.extract_coords(htmls[i], texts[i])
-                if got is not None:
-                    lat[i], lon[i] = got
-            if with_metrics:
-                ntok = np.array(
-                    [len((t or "").split()) for t in texts], dtype=np.int32
-                )
-                sims = simhash_batch(texts)
+            lat = b["lat"].to_numpy(dtype=np.float64, na_value=np.nan)
+            lon = b["lon"].to_numpy(dtype=np.float64, na_value=np.nan)
             if hints:
                 miss = np.isnan(lat)
                 if miss.any():
@@ -321,22 +199,17 @@ def tag_pages(
                         if h in hints:
                             lat[i], lon[i] = hints[h]
             x, y = proj.forward(lon, lat)
-            ok = np.isfinite(x) & np.isfinite(y)
-            poly = np.array([None] * n, dtype=object)
-            if ok.any():
-                rows, ords = gindex.assign_points(
-                    idx, x[ok], y[ok], boundary=boundary, match="last"
-                )
-                ok_idx = np.nonzero(ok)[0]
-                for r, o in zip(rows, ords):
-                    poly[ok_idx[r]] = idx.poly_ids[o]
+            poly = _assign_batch(idx, ids, x, y)
             out = {"url": b["url"], "poly_id": poly, "x": x, "y": y}
             if with_metrics:
-                out["n_tokens"] = ntok
-                out["simhash"] = sims
+                texts = b["text"].tolist()
+                out["n_tokens"] = np.array(
+                    [len((t or "").split()) for t in texts], dtype=np.int32
+                )
+                out["simhash"] = simhash_batch(texts)
             yield pd.DataFrame(out)
 
-    return pages.select("url", "html", "text").mapInPandas(fn, schema=schema)
+    return src.mapInPandas(fn, schema=schema)
 
 
 def pages_per_region(
@@ -414,7 +287,6 @@ def pip_join_shuffle(
     geom_col: str = "geometry",
     burn_col: str = "burn",
     res: int = gcells.RES_DEFAULT,
-    boundary: str = "include",
     n_salt: int = 8,
 ) -> DataFrame:
     """Cell-bucketed SHUFFLE spatial join — the no-broadcast scale path
@@ -495,7 +367,7 @@ def pip_join_shuffle(
         parts = gwkb.polygon_parts(gwkb.decode(bytes(geo["geometry"].iloc[0])))
         x = cand["x"].to_numpy(dtype=np.float64)
         y = cand["y"].to_numpy(dtype=np.float64)
-        hit = ggeom.points_in_polygon(x, y, parts, boundary)
+        hit = ggeom.points_in_polygon(x, y, parts)
         if not hit.any():
             return empty
         got = cand.loc[hit, out_cols + ["burn"]].copy()

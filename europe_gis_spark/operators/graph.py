@@ -21,7 +21,7 @@ def coarse_iter_shuffles(spark, min_size: str = "1m"):
     """Scope-limited AQE coalesce floor for TINY-state iterative loops.
 
     The session default floors `coalescePartitions.minPartitionSize` at
-    1 byte so CPU-dense shuffles (text hashing, pairwise cosine) spread
+    64k so CPU-dense shuffles (text hashing, pairwise cosine) spread
     across every core. Label-propagation state is the opposite regime —
     a few KB per round, trivial per-row work — where 32-way spreading
     just multiplies task overhead by rounds × stages (measured:

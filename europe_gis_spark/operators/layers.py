@@ -161,10 +161,6 @@ _CC_SCHEMA = (
 _NODE_FMT = "%s|%09d|%09d|%09d"
 
 
-def _node_key(layer, trow, tcol, lid) -> str:
-    return f"{layer}|{trow:09d}|{tcol:09d}|{lid:09d}"
-
-
 def _label_tile(a: np.ndarray, tile_w: int) -> np.ndarray:
     """Two-pass 4-connectivity labeling of equal-value pixels (no scipy):
     row runs get provisional labels, vertical merges go through a tiny

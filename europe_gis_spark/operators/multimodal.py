@@ -651,14 +651,6 @@ def image_features(
     return df.select(key_col, payload_col).mapInPandas(fn, schema=FEATURES_SCHEMA)
 
 
-def frame_sample_stub(payload: bytes, every_n: int = 10, fake: bool = False) -> list[np.ndarray]:
-    """Video frame sampling STUB (no ffmpeg in container): deterministic
-    fake yields 3 synthetic frames derived from the payload digest."""
-    if not fake:
-        raise NotImplementedError("video codecs not available; pass fake=True")
-    return [decode_image(payload + bytes([i]), fake=True) for i in range(3)]
-
-
 def encode_wav(wave: np.ndarray, sample_rate: int = 16_000) -> bytes:
     """Mono float waveform in [-1, 1] → 16-bit PCM RIFF/WAVE bytes
     (pure Python) — fixture/sink twin of :func:`decode_wav`."""

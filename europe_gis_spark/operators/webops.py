@@ -131,8 +131,8 @@ def extract_links(
 
     Entirely JVM-side: ``regexp_extract_all`` pulls every
     ``href="..."`` in one codegen'd pass (the payload never crosses
-    Arrow — same design as the flagship's jvm_extract), then URL
-    resolution is a CASE: absolute http(s) hrefs pass through,
+    Arrow — same design as the flagship's JVM-side coordinate regexes),
+    then URL resolution is a CASE: absolute http(s) hrefs pass through,
     root-relative ``/path`` hrefs resolve against the source's
     scheme+host, everything else (mailto:, javascript:, fragments,
     non-rooted relatives) is dropped. Map-side only — no shuffle; pass

@@ -115,20 +115,6 @@ def avg_downsample(cells: DataFrame, factor: int, value_col: str = "value") -> D
     )
 
 
-def bbox_agg(cells: DataFrame) -> DataFrame:
-    """G1: bounding box of valid cells per layer."""
-    return (
-        cells.filter(F.col("value") > -1000.0)
-        .groupBy("layer")
-        .agg(
-            F.min("wx").alias("xmin"),
-            F.min("wy").alias("ymin"),
-            F.max("wx").alias("xmax"),
-            F.max("wy").alias("ymax"),
-        )
-    )
-
-
 def minmax_normalize(cells: DataFrame, bad_value: float = -1000.0) -> DataFrame:
     """G8+F5: min-max scale valid pixels to [0, 255] uint8-style, via a
     scalar-subquery-free window-less two-pass plan: aggregate per layer
@@ -207,18 +193,4 @@ def overlap_stats(
         F.count("poly_id").alias("cover_n"),
         winner.alias("win_poly"),
         (F.count("poly_id") >= 2).alias("on_border"),
-    )
-
-
-def zonal_sum_area_weighted(
-    cell_values: DataFrame, weights: DataFrame, value_col: str, zone_col: str = "zone_id"
-) -> DataFrame:
-    """G5: Σ value·area_frac per zone. ``weights`` rows are
-    (cell_key, zone_id, area_frac) from the clip-area kernel
-    (geom.clip_area_rect) — the areal-interpolation reallocation of
-    process_raster_layer.py:398-432."""
-    j = cell_values.join(weights, on=list(set(cell_values.columns) & {"grd_id", "y", "x"}))
-    return j.groupBy(zone_col).agg(
-        F.sum(F.col(value_col) * F.col("area_frac")).alias("zonal_sum"),
-        F.count("*").alias("n_cells"),
     )

@@ -5379,7 +5379,8 @@ def q_link_pagerank(spark, sf_dir):
     unrolled-recurrence oracle exact: a wrong href regex, a broken
     relative-URL resolution or a junk link leaking through changes the
     graph and hash-mismatches. Extraction is JVM regexp_extract_all
-    (payload never crosses Arrow — flagship jvm_extract design)."""
+    (payload never crosses Arrow — the flagship's JVM-side coordinate
+    regex design)."""
     from .operators import graph, webops
 
     docs = _docs_with_urls(spark, sf_dir)

@@ -28,49 +28,81 @@ def level3():
     return ap[ap.levl_code == 3].reset_index(drop=True)
 
 
-def brute_force_assign(pages_pdf: pd.DataFrame, polys: pd.DataFrame) -> dict:
-    """Oracle: decode every polygon, test every resolvable page point,
-    LAST (table-order) valid polygon wins — rasterio MergeAlg.replace
-    burn order, the same rule as the engine's default match='last'."""
+def oracle_points(pages_pdf: pd.DataFrame) -> dict:
+    """Oracle: url -> projected (x, y) from the per-row Python regexes
+    (hx.extract_coords), host hint as fallback; None if unresolvable or
+    not projectable."""
     hints = {r.host: (r.lat, r.lon) for r in pgen.host_city_hints().itertuples()}
     out = {}
-    decoded = []
-    for r in polys.itertuples():
-        parts = wkb.polygon_parts(wkb.decode(r.geometry))
-        if geom.is_valid_polygon(parts):
-            decoded.append((r.nuts_id, parts))
     for row in pages_pdf.itertuples():
         got = hx.extract_coords(row.html, row.text)
         if got is None:
-            host = hx.extract_host(row.url)
-            got = hints.get(host)
+            got = hints.get(hx.extract_host(row.url))
         if got is None:
             out[row.url] = None
             continue
         lat, lon = got
         x, y = proj.forward(np.array([lon]), np.array([lat]))
-        hit = None
-        for pid, parts in decoded:  # later burns overwrite earlier ones
-            if geom.points_in_polygon(x, y, parts, boundary="include")[0]:
-                hit = pid
-        out[row.url] = hit
+        ok = np.isfinite(x[0]) and np.isfinite(y[0])
+        out[row.url] = (float(x[0]), float(y[0])) if ok else None
     return out
 
 
+def brute_force_assign(pages_pdf: pd.DataFrame, polys: pd.DataFrame) -> dict:
+    """Oracle: decode every polygon, test every resolvable page point,
+    LAST (table-order) valid polygon wins — rasterio MergeAlg.replace
+    burn order, the same rule as the engine's default match='last'."""
+    decoded = []
+    for r in polys.itertuples():
+        parts = wkb.polygon_parts(wkb.decode(r.geometry))
+        if geom.is_valid_polygon(parts):
+            decoded.append((r.nuts_id, parts))
+    out = {}
+    for url, pt in oracle_points(pages_pdf).items():
+        hit = None
+        if pt is not None:
+            x, y = np.array([pt[0]]), np.array([pt[1]])
+            for pid, parts in decoded:  # later burns overwrite earlier ones
+                if geom.points_in_polygon(x, y, parts, boundary="include")[0]:
+                    hit = pid
+        out[url] = hit
+    return out
+
+
+def _same_xy(got, want) -> bool:
+    """Arrow hands a NaN coordinate back as NULL, the oracle says None.
+    The engine projects whole batches, the oracle one point at a time,
+    so allow a last-bit difference (a micrometre)."""
+    if got is None or want is None:
+        return got is want
+    return bool(np.allclose(got, want, rtol=0, atol=1e-6))
+
+
 def test_spatial_join_matches_bruteforce(spark, fixture_pages, level3):
+    """The flagship body (JVM-regex coordinates, host-hint fallback,
+    projection, index probe) against the all-Python per-row oracle on
+    the full fixture set — non-UTF8 bytes, empty html, boundary points,
+    hint-fallback hosts — for the plain and the fused-metrics pass."""
     pages_df = spark.createDataFrame(fixture_pages)
     polys_df = spark.createDataFrame(level3)
     hints = pgen.host_city_hints()
-
     idx_bc = geo_join.build_polygon_index_bc(spark, polys_df)
-    resolved = geo_join.resolve_pages(spark, pages_df, host_hints=hints)
-    assigned = geo_join.assign_polygons(resolved, idx_bc).collect()
-    got = {r.url: r.poly_id for r in assigned}
-
     want = brute_force_assign(fixture_pages, level3)
-    assert len(got) == N_PAGES
-    mismatches = {u: (got[u], want[u]) for u in want if got[u] != want[u]}
-    assert not mismatches, f"{len(mismatches)} mismatches, e.g. {list(mismatches.items())[:5]}"
+    want_xy = oracle_points(fixture_pages)
+
+    for metrics in (False, True):
+        rows = geo_join.tag_pages(
+            pages_df, idx_bc, host_hints=hints, with_metrics=metrics
+        ).collect()
+        assert len(rows) == N_PAGES
+        got = {r.url: r.poly_id for r in rows}
+        mismatches = {u: (got[u], want[u]) for u in want if got[u] != want[u]}
+        assert not mismatches, f"{len(mismatches)} mismatches, e.g. {list(mismatches.items())[:5]}"
+        got_xy = {r.url: None if r.x is None else (r.x, r.y) for r in rows}
+        bad_xy = {
+            u: (got_xy[u], xy) for u, xy in want_xy.items() if not _same_xy(got_xy[u], xy)
+        }
+        assert not bad_xy, f"{len(bad_xy)} coordinate mismatches, e.g. {list(bad_xy.items())[:5]}"
     # sanity on the mix: some matched, some null (outside / unresolvable)
     n_hit = sum(1 for v in want.values() if v)
     assert n_hit > N_PAGES * 0.5
@@ -84,9 +116,13 @@ def test_join_partitioning_invariance(spark, fixture_pages, level3):
 
     def run(nparts):
         pages_df = spark.createDataFrame(fixture_pages).repartition(nparts)
-        resolved = geo_join.resolve_pages(spark, pages_df, host_hints=hints)
-        rows = geo_join.assign_polygons(resolved, idx_bc).collect()
-        return sorted((r.url, r.poly_id) for r in rows)
+        tagged = geo_join.tag_pages(pages_df, idx_bc, host_hints=hints)
+        pts = tagged.filter("x IS NOT NULL").select("url", "x", "y")
+        assigned = geo_join.assign_polygons(pts.repartition(nparts), idx_bc)
+        return (
+            sorted((r.url, r.poly_id) for r in tagged.collect()),
+            sorted((r.url, r.poly_id) for r in assigned.collect()),
+        )
 
     assert run(2) == run(13)
 
@@ -139,38 +175,6 @@ def test_multi_match_overlap_counting(spark, level3):
     assert counts["interior"] == 1
 
 
-def test_jvm_extract_path_equals_python_path(spark, fixture_pages, level3):
-    """The JVM-regex coordinate prefilter (tag_pages jvm_extract=True,
-    the default — html never crosses Arrow) must be row-for-row equal
-    to the all-Python extraction path on the full fixture set, which
-    includes non-UTF8 bytes, empty html, boundary points and
-    hint-fallback hosts — for both the plain and the fused-metrics
-    variant."""
-    pages = spark.createDataFrame(fixture_pages)
-    idx = geo_join.build_polygon_index_bc(spark, spark.createDataFrame(level3))
-    hints = pgen.host_city_hints()
-    for metrics in (False, True):
-        a = (
-            geo_join.tag_pages(
-                pages, idx, host_hints=hints, with_metrics=metrics,
-                jvm_extract=True,
-            )
-            .toPandas()
-            .sort_values("url")
-            .reset_index(drop=True)
-        )
-        b = (
-            geo_join.tag_pages(
-                pages, idx, host_hints=hints, with_metrics=metrics,
-                jvm_extract=False,
-            )
-            .toPandas()
-            .sort_values("url")
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(a, b)
-
-
 def test_shuffle_pip_equals_broadcast_pip(spark, fixture_pages, level3):
     """pip_join_shuffle (no-broadcast cell-bucketed hash join + salted
     cogroup refine) must assign every resolvable page to exactly the
@@ -178,10 +182,11 @@ def test_shuffle_pip_equals_broadcast_pip(spark, fixture_pages, level3):
     boundary rule — across the full fixture set (hot city cell, border
     points, multi-polygon regions)."""
     pages = spark.createDataFrame(fixture_pages)
-    resolved = geo_join.resolve_pages(
-        spark, pages, host_hints=pgen.host_city_hints()
+    idx = geo_join.build_polygon_index_bc(spark, spark.createDataFrame(level3))
+    tagged = geo_join.tag_pages(
+        pages, idx, host_hints=pgen.host_city_hints()
     ).filter("x IS NOT NULL")
-    pts = resolved.select("url", "x", "y")
+    pts = tagged.select("url", "x", "y")
     polys_pdf = level3.copy()
     polys_pdf["burn"] = range(len(polys_pdf))
     polys_df = spark.createDataFrame(polys_pdf)
@@ -191,15 +196,48 @@ def test_shuffle_pip_equals_broadcast_pip(spark, fixture_pages, level3):
             pts, polys_df, keep_cols=("url",)
         ).collect()
     }
-    idx = geo_join.build_polygon_index_bc(spark, spark.createDataFrame(level3))
-    want = {
-        r.url: r.poly_id
-        for r in geo_join.assign_polygons(
-            resolved, idx, keep_cols=("url",)
-        ).collect()
-    }
+    want = {r.url: r.poly_id for r in tagged.collect()}
     assert got == want
     assert any(v is not None for v in want.values())
+
+
+def test_degenerate_batches_keep_every_row_null(spark, level3):
+    """Batches with no usable point — NULL or NaN x/y, pages with no
+    coordinates and no host hint, zero rows — come back row for row with
+    poly_id NULL through every caller of the shared batch body."""
+    idx = geo_join.build_polygon_index_bc(spark, spark.createDataFrame(level3))
+    hints = pgen.host_city_hints()
+    nan = float("nan")
+    pts = spark.createDataFrame(
+        [("a", None, None), ("b", None, 1.0), ("c", nan, nan), ("d", 1.0, nan)],
+        "url string, x double, y double",
+    )
+    pages = spark.createDataFrame(
+        [
+            ("https://nowhere.invalid/1", b"<p>no coordinates</p>", "plain text"),
+            ("https://nowhere.invalid/2", b"", ""),
+            ("https://nowhere.invalid/3", None, None),
+        ],
+        "url string, html binary, text string",
+    )
+    runs = [
+        (pts, lambda df: geo_join.assign_polygons(df, idx, match="last")),
+        (pts, lambda df: geo_join.assign_polygons(df, idx, match="all")),
+        (pages, lambda df: geo_join.tag_pages(df, idx, host_hints=hints)),
+        (pages, lambda df: geo_join.tag_pages(df, idx, with_metrics=True)),
+    ]
+    for src, run in runs:
+        rows = run(src).collect()
+        assert sorted(r.url for r in rows) == sorted(r.url for r in src.collect())
+        assert all(r.poly_id is None for r in rows)
+        assert run(src.filter("url = 'no such url'")).count() == 0
+
+    # an empty Arrow batch straight into the batch body
+    ids = np.array(idx.value.poly_ids, dtype=object)
+    none = np.empty(0)
+    assert len(geo_join._assign_batch(idx.value, ids, none, none)) == 0
+    rows, pids = geo_join._assign_batch(idx.value, ids, none, none, match="all")
+    assert len(rows) == len(pids) == 0
 
 
 def test_streaming_geo_tag_equals_batch(spark, fixture_pages, level3, tmp_path):

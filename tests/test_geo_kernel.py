@@ -380,9 +380,9 @@ def test_index_assign_points_first_and_all():
     rows, ords = index.assign_points(idx, px, py, match="last")
     pairs = {(int(r), idx.poly_ids[o]) for r, o in zip(rows, ords)}
     assert pairs == {(0, "A"), (1, "B"), (2, "B")}
-    rows, ords = index.assign_points(idx, px, py, match="first")
-    pairs = {(int(r), idx.poly_ids[o]) for r, o in zip(rows, ords)}
-    assert pairs == {(0, "A"), (1, "A"), (2, "B")}
+    # 'first' (lowest ordinal wins) is not a burn order the engine has
+    with pytest.raises(ValueError):
+        index.assign_points(idx, px, py, match="first")
 
 
 # ----------------------------------------------------------- simplification

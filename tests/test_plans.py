@@ -73,11 +73,10 @@ def test_flagship_join_has_single_shuffle(spark):
     idx_bc = geo_join.build_polygon_index_bc(
         spark, polys_df.filter("levl_code = 3")
     )
-    resolved = geo_join.resolve_pages(spark, pages_df, host_hints=pgen.host_city_hints())
     counts = (
-        geo_join.assign_polygons(resolved, idx_bc)
+        geo_join.tag_pages(pages_df, idx_bc, host_hints=pgen.host_city_hints())
         .groupBy("poly_id")
-        .agg(F.count("*").alias("n"))
+        .count()
     )
     p = plan_str(counts, mode="simple")
     # one shuffle for the final agg (AQE may add a read-side node; count
@@ -86,8 +85,8 @@ def test_flagship_join_has_single_shuffle(spark):
 
 
 def test_minhash_signatures_are_map_side(spark):
-    """MinHash signature computation must be shuffle-free (array
-    higher-order functions over the shingle array, no explode+groupBy):
+    """MinHash signature computation must be shuffle-free (one Arrow
+    pass hashing the shingles, no explode+groupBy):
     zero Exchange in the signature plan, and the full LSH candidate job
     must shuffle only band keys — one Exchange for banding plus the
     pair-dedup aggregation, never the shingle rows."""
