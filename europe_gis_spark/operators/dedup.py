@@ -378,88 +378,16 @@ def verify_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Duplicate CLUSTERS from near-dup pairs: distributed connected
-    components by iterative min-label propagation (the standard
-    large-graph CC — each round every node takes the min label among
-    itself and its neighbors; converges in O(component diameter)
-    rounds, checked by a driver-side changed-count). This is what a
-    real dedup pipeline keeps: one representative per cluster.
-
-    Output: (doc_id, component) where component = min doc_id reachable.
-    Each round is one join + one agg; ``localCheckpoint`` truncates the
-    growing lineage so round N doesn't replay rounds 1..N−1.
-    """
-    from .graph import coarse_iter_shuffles
-
-    edges = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    converged = False
-    with coarse_iter_shuffles(pairs.sparkSession):
-        edges = (
-            edges.union(
-                edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        labels = (
-            edges.select(F.col("a").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("label"))
-            .localCheckpoint()
-        )
-        for _ in range(max_iter):
-            nbr = (
-                edges.join(labels, edges.b == labels.node)
-                .groupBy("a")
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            merged = (
-                labels.join(nbr, labels.node == nbr.a, "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"),
-                        F.coalesce(F.col("nbr_label"), F.col("label")),
-                    ).alias("label"),
-                )
-                .localCheckpoint()
-            )
-            changed = (
-                merged.alias("m")
-                .join(labels.alias("l"), "node")
-                .filter(F.col("m.label") < F.col("l.label"))
-                .count()
-            )
-            labels = merged
-            if changed == 0:
-                converged = True
-                break
-    if not converged:
-        # silent partial propagation would split duplicate clusters
-        # undetected — fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); a component's diameter "
-            "exceeds max_iter — raise max_iter"
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component"))
-
-
 def keep_flags(docs: DataFrame, components: DataFrame) -> DataFrame:
     """The operational end of the dedup pipeline: per-doc KEEP decision.
     A doc is kept iff it belongs to no near-dup cluster or is its
     cluster's canonical representative (= the component id, the minimum
-    doc_id — deterministic). Input ``components`` is
-    :func:`connected_components` output — one row per CLUSTERED doc, so
-    on a crawl where 30–50 % of docs are near-dups it is corpus-scale:
-    the join must shuffle, not broadcast (AQE still picks broadcast on
-    its own when the table measures small)."""
+    doc_id — deterministic). Input ``components`` is (doc_id, component):
+    :func:`graph.cc_star` output over the verified pairs, ``node``
+    renamed to doc_id. It has one row per CLUSTERED doc, so on a crawl
+    where 30–50 % of docs are near-dups it is corpus-scale: the join
+    must shuffle, not broadcast (AQE still picks broadcast on its own
+    when the table measures small)."""
     return (
         docs.select("doc_id")
         .join(components, "doc_id", "left")

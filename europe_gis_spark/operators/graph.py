@@ -2,44 +2,17 @@
 a crawl pipeline: PageRank-style authority scoring feeds the same
 corpus-selection stage as the quality scores in textops).
 
-Same distributed shape as ``dedup.connected_components``: each
-iteration is one join + one aggregation, lineage truncated per round
-with ``localCheckpoint`` so round N never replays rounds 1..N−1. At
-corpus scale both sides hash-partition on the node key; no driver-side
-state beyond one scalar (the dangling-mass sum) per iteration.
+Each iteration is a few node-keyed shuffles (joins, aggregations,
+window mins), lineage truncated per round with ``localCheckpoint`` so
+round N never replays rounds 1..N−1. At corpus scale both sides
+hash-partition on the node key; no driver-side state beyond one scalar
+(the dangling-mass sum, the convergence count) per iteration. :func:`cc_star` is the engine's one
+connected-components operator (dedup clusters, polygonize merges).
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
-from pyspark.sql import DataFrame, functions as F
-
-
-@contextmanager
-def coarse_iter_shuffles(spark, min_size: str = "1m"):
-    """Scope-limited AQE coalesce floor for TINY-state iterative loops.
-
-    The session default floors `coalescePartitions.minPartitionSize` at
-    64k so CPU-dense shuffles (text hashing, pairwise cosine) spread
-    across every core. Label-propagation state is the opposite regime —
-    a few KB per round, trivial per-row work — where 32-way spreading
-    just multiplies task overhead by rounds × stages (measured:
-    cc_components 6.2 s → 9.7 s, 282 task-core-s, after the session
-    change). Restoring the 1 MB floor around the loop lets AQE collapse
-    each round to a handful of tasks; every round's work is
-    materialized (eager localCheckpoint / count) inside the scope, so
-    the restored conf can't leak into the caller's plan."""
-    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, min_size)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 #: above this node count the per-round rank snapshot moves from
@@ -73,7 +46,7 @@ def pagerank(
     scalar aggregate per round — cheap next to the contribution join);
     ``iters`` becomes the maximum, and exhausting it without reaching
     ``tol`` raises loudly (same non-convergence contract as
-    ``dedup.connected_components``).
+    :func:`cc_star`).
 
     Lineage: ranks are re-checkpointed each round so round N never
     replays rounds 1..N−1. Below ``disk_checkpoint_nodes`` that is an
@@ -371,11 +344,11 @@ def shortest_hops(
 
     Per round: ONE frontier⋈edges hash join + an anti-join against the
     settled set, both keyed on node; the settled set re-checkpoints per
-    round (same lineage policy as ``pagerank``/``connected_components``).
+    round (same lineage policy as ``pagerank``/``cc_star``).
     O(diameter) blocking rounds — the standard distributed-BFS shape;
     label-correcting variants trade that for more shuffled volume.
     Exhausting ``max_iters`` with a non-empty frontier raises loudly
-    (same non-convergence contract as connected_components).
+    (same non-convergence contract as ``cc_star``).
     """
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -487,81 +460,76 @@ def cc_star(
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the O(log n)-round scale twin of
-    ``dedup.connected_components``'s min-label propagation, whose
-    round count is O(component diameter): a 10^6-node path component
-    needs ~10^6 propagation rounds but ~20 star rounds, so this is the
-    form that survives web-graph-shaped inputs at 100 TB.
+    Beyond", SoCC'14): O(log n) rounds, independent of component
+    diameter — a 10^6-node path component needs ~20 star rounds, not
+    the ~10^6 of min-label propagation.
 
     large-star hangs every strictly-larger neighbor of u onto
     m = min(N(u) ∪ {u}); small-star (on the (big → small)-oriented
     result) hangs u and its smaller neighbors onto their minimum. Each
-    half-round is one node-keyed aggregation + one node-keyed join —
-    two shuffles — with no driver-side state; convergence is one
-    count over a symmetric ``exceptAll`` diff per round (empty diff ⇔
-    the oriented edge set is a fixpoint of both steps ⇔ every node
-    points directly at its component minimum). Lineage is truncated
-    per round with ``localCheckpoint`` like :func:`pagerank`.
+    half-round is one node-keyed window min — one shuffle, where an
+    aggregate + join back would take two or three — and a distinct ends
+    the round; no driver-side state. Both steps preserve connectivity
+    and every edge points from the larger node to the smaller, so once
+    the edge set is a star forest (no node both a child and a parent,
+    no child with two parents) each star is one whole component centred
+    on its minimum: that test is the round's one ``limit(1).count()``.
+    The input is read once (one eager checkpoint of the projected edge
+    list) and lineage is truncated per round like :func:`pagerank`.
 
-    Returns (node, component) for every node incident to an edge,
-    component = min reachable node id. Raises if not converged in
-    ``max_rounds`` (log2 of the node count plus slack is enough).
+    Node keys may be of any orderable type (the polygonize merge uses
+    zero-padded strings). Returns (node, component) for every node
+    incident to an edge, component = min reachable node. Raises if not
+    converged in ``max_rounds`` (log2 of the node count plus slack is
+    enough).
     """
     raw = edges.select(
-        F.col(a_col).cast("long").alias("x"),
-        F.col(b_col).cast("long").alias("y"),
-    )
+        F.col(a_col).alias("x"), F.col(b_col).alias("y")
+    ).localCheckpoint(eager=True)
     universe = (
         raw.select(F.col("x").alias("node"))
         .union(raw.select(F.col("y").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    e = (
-        raw.filter(F.col("x") != F.col("y"))
-        .select(
-            F.greatest("x", "y").alias("u"), F.least("x", "y").alias("v")
+    # duplicates are harmless here: every step below takes a min per
+    # node, and each round's output is distinct
+    e = raw.filter(F.col("x") != F.col("y")).select(
+        F.greatest("x", "y").alias("u"), F.least("x", "y").alias("v")
+    )
+    by_u = Window.partitionBy("u")
+    for _ in range(max_rounds):
+        # large-star over the full (undirected) neighborhood
+        und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        large = (
+            und.select(
+                "u", "v", F.least(F.min("v").over(by_u), "u").alias("m")
+            )
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    with coarse_iter_shuffles(edges.sparkSession):
-        for _ in range(max_rounds):
-            # large-star over the full (undirected) neighborhood
-            und = e.union(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            mins = (
-                und.groupBy("u")
-                .agg(F.min("v").alias("mv"))
-                .select("u", F.least("mv", "u").alias("m"))
-            )
-            large = (
-                und.filter(F.col("v") > F.col("u"))
-                .join(mins, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .distinct()
-            )
-            # small-star on the (big → small)-oriented large-star output
-            mins_s = large.groupBy("u").agg(F.min("v").alias("m"))
-            with_min = large.join(mins_s, "u")
-            small = (
-                with_min.select(F.col("v").alias("n"), F.col("m"))
-                .union(with_min.select(F.col("u").alias("n"), F.col("m")))
-                .filter(F.col("n") != F.col("m"))
-                .select(F.col("n").alias("u"), F.col("m").alias("v"))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                small.exceptAll(e).union(e.exceptAll(small)).limit(1).count()
-            )
-            e = small
-            if changed == 0:
-                converged = True
-                break
-    if not converged:
+        # small-star on the (big → small)-oriented large-star output
+        with_min = large.select("u", "v", F.min("v").over(by_u).alias("m"))
+        e = (
+            with_min.select(F.col("v").alias("n"), F.col("m"))
+            .union(with_min.select(F.col("u").alias("n"), F.col("m")))
+            .filter(F.col("n") != F.col("m"))
+            .select(F.col("n").alias("u"), F.col("m").alias("v"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        # star-forest test: per node, its parent count (e is distinct)
+        # and whether it is anyone's parent
+        roles = e.select(
+            F.col("u").alias("n"), F.lit(1).alias("c"), F.lit(0).alias("p")
+        ).union(e.select(F.col("v").alias("n"), F.lit(0), F.lit(1)))
+        not_star = (
+            roles.groupBy("n")
+            .agg(F.sum("c").alias("c"), F.max("p").alias("p"))
+            .filter((F.col("c") > 1) | ((F.col("c") > 0) & (F.col("p") > 0)))
+        )
+        if not_star.limit(1).count() == 0:
+            break
+    else:
         raise RuntimeError(
             f"cc_star did not converge in {max_rounds} rounds — raise "
             "max_rounds (log2(nodes) + slack is sufficient)"

@@ -87,7 +87,7 @@ def polygonize(tiles: DataFrame, tile_w: int = 16) -> DataFrame:
     """
     from ..geo import wkb as gwkb
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         layer, trow, tcol = key
         rows = []
         for t in pdf.itertuples():
@@ -156,8 +156,8 @@ _CC_SCHEMA = (
 
 # node key for cross-tile label equivalence: zero-padded so STRING order
 # equals (layer, tile_row, tile_col, local_id) tuple order — both merge
-# paths (driver union-find, distributed min-label propagation) then
-# produce identical min-root region ids
+# paths (driver union-find, distributed star CC) then produce identical
+# min-root region ids
 _NODE_FMT = "%s|%09d|%09d|%09d"
 
 
@@ -213,7 +213,7 @@ def _tile_cc_tagged(tiles: DataFrame, tile_w: int, with_rects: bool) -> DataFram
     label (global pixel bounds in ymin..xmax), the building blocks for
     region geometry reconstruction."""
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         layer, trow, tcol = key
         rows = []
         for t in pdf.itertuples():
@@ -299,10 +299,10 @@ def _label_mapping(
       * ≤ ``distributed_threshold`` edges → collect + driver union-find
         (the small-raster fast path, same small-side-collect pattern as
         the broadcast polygon index);
-      * above it → distributed min-label propagation reusing
-        :func:`europe_gis_spark.operators.dedup.connected_components`
-        (O(diameter) join+agg rounds), so a 10¹²-pixel raster never
-        funnels its boundary graph through the driver.
+      * above it → distributed large/small-star connected components,
+        :func:`europe_gis_spark.operators.graph.cc_star` (O(log n)
+        shuffle rounds), so a 10¹²-pixel raster never funnels its
+        boundary graph through the driver.
 
     Both paths compute min-over-identical-string-keys, so region ids are
     IDENTICAL regardless of path (property-tested)."""
@@ -338,14 +338,9 @@ def _label_mapping(
     # boundary graphs AND doubles as the collect for the fast path
     head = edges.take(distributed_threshold + 1)
     if len(head) > distributed_threshold:
-        from .dedup import connected_components
+        from .graph import cc_star
 
-        return (
-            connected_components(edges, "a", "b", max_iter=200).select(
-                F.col("doc_id").alias("node"), F.col("component").alias("root")
-            ),
-            False,
-        )
+        return cc_star(edges).withColumnRenamed("component", "root"), False
     parent: dict = {}
 
     def find(k):
@@ -405,7 +400,7 @@ def polygonize_regions(
     Plan: per-tile CC labeling in one ``applyInPandas`` (region rows and
     boundary strips share the groupBy exchange), cross-tile label
     equivalences merged driver-side below ``distributed_threshold``
-    edges and via distributed min-label propagation above it (see
+    edges and via distributed star connected components above it (see
     :func:`_label_mapping`), then a broadcast mapping join + one
     partial+final hash agg.
     """
@@ -571,7 +566,7 @@ def region_geometries(
         tagged.filter(F.col("kind") == 3), mapping, bcast_ok
     )
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         layer, region_id = key
         wkb_bytes, n_px = _rects_to_polygon(
             pdf[["ymin", "xmin", "ymax", "xmax"]].itertuples(index=False)

@@ -142,7 +142,7 @@ def extract_patches(
             tile_with_halo(lab, tile_w, win).withColumn("is_label", F.lit(True))
         )
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         layer, trow, tcol = key
         empty = pd.DataFrame(
             {

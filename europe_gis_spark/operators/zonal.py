@@ -58,7 +58,7 @@ def cells_to_tiles(
     array assembly is numpy inside applyInPandas.
     """
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         layer, trow, tcol = key

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from .datagen.geodata import AA_X0, AA_Y0
 from .geo import wkb
-from .operators import dedup, geo_join, knn, similarity, textops
+from .operators import dedup, geo_join, graph, knn, similarity, textops
 
 # --------------------------------------------------------------------------
 # deterministic geo constants (definitions shared by Spark and the oracles)
@@ -770,16 +770,16 @@ def q_geo_pip(spark, sf_dir):
 
 def q_incremental_tag(spark, sf_dir):
     """The flagship geo-tag path crossed with a STREAMING trigger, as a
-    driver-checked query (r4 directive 7): event points land in a
-    parquet source directory, Structured Streaming drains them with
-    Trigger.AvailableNow through the cell-bucketed PIP assignment
-    (the broadcast index rides the mapInPandas closure — identical
-    kernel to the batch path), and every micro-batch flows through the
-    IDEMPOTENT keyed upsert sink. The drain runs TWICE — the second
-    invocation must be an exactly-once no-op — and the result is read
-    BACK FROM THE SINK, so source offsets, the foreachBatch anti-join
-    and the at-rest parquet are all inside the checked DAG. Oracle:
-    the batch flagship's (``_sql_geo_pip``) — stream ≡ batch."""
+    registered query: event points land in a parquet source directory,
+    Structured Streaming drains them with Trigger.AvailableNow through
+    the cell-bucketed PIP assignment (the broadcast index rides the
+    mapInPandas closure — identical kernel to the batch path), and
+    every micro-batch flows through the IDEMPOTENT keyed upsert sink.
+    The drain runs TWICE — the second invocation must be an
+    exactly-once no-op — and the result is read BACK FROM THE SINK, so
+    source offsets, the foreachBatch anti-join and the at-rest parquet
+    are all inside the checked DAG. Oracle: the batch flagship's
+    (``_sql_geo_pip``) — stream ≡ batch."""
     import hashlib
     import os
     import shutil
@@ -1992,16 +1992,23 @@ ORDER BY c.doc_a, c.doc_b
 """
 
 
+def _dup_clusters(docs):
+    """(doc_id, component) per clustered doc: LSH candidates → exact
+    Jaccard verify (≥ 0.5) → distributed connected components
+    (large/small-star), component = min doc_id of the cluster."""
+    verified = dedup.verify_pairs(
+        dedup.lsh_candidate_pairs(docs), docs, threshold=0.5
+    )
+    return graph.cc_star(verified, "doc_a", "doc_b").withColumnRenamed(
+        "node", "doc_id"
+    )
+
+
 def q_dedup_components(spark, sf_dir):
     """Duplicate clusters: LSH candidates → exact Jaccard verify →
-    distributed connected components (min-label propagation). Oracle:
-    the same pair set closed with a recursive CTE in DuckDB."""
-    docs = _docs_with_dups(spark, sf_dir)
-    cand = dedup.lsh_candidate_pairs(docs)
-    verified = dedup.verify_pairs(cand, docs, threshold=0.5).select(
-        "doc_a", "doc_b"
-    )
-    comp = dedup.connected_components(verified)
+    distributed connected components (large/small-star). Oracle: the
+    same pair set closed with a recursive CTE in DuckDB."""
+    comp = _dup_clusters(_docs_with_dups(spark, sf_dir))
     return (
         comp.groupBy("component")
         .agg(F.count("*").alias("n_docs"), F.max("doc_id").alias("max_doc"))
@@ -2497,12 +2504,7 @@ def q_dedup_keep(spark, sf_dir):
     representative (min doc_id) of each verified near-dup cluster kept,
     other members dropped, non-clustered docs kept."""
     docs = _docs_with_dups(spark, sf_dir).localCheckpoint(eager=True)
-    cand = dedup.lsh_candidate_pairs(docs)
-    verified = dedup.verify_pairs(cand, docs, threshold=0.5).select(
-        "doc_a", "doc_b"
-    )
-    comp = dedup.connected_components(verified)
-    return dedup.keep_flags(docs, comp).orderBy("doc_id")
+    return dedup.keep_flags(docs, _dup_clusters(docs)).orderBy("doc_id")
 
 
 def _dedup_keep_ctes() -> str:
@@ -2972,12 +2974,7 @@ def q_corpus_select(spark, sf_dir):
     # the union feeds four branches (candidates, verify, keep, quality)
     # across the CC loop's many jobs — materialize it once
     docs = _docs_with_dups(spark, sf_dir).localCheckpoint(eager=True)
-    cand = dedup.lsh_candidate_pairs(docs)
-    verified = dedup.verify_pairs(cand, docs, threshold=0.5).select(
-        "doc_a", "doc_b"
-    )
-    comp = dedup.connected_components(verified)
-    keep = dedup.keep_flags(docs, comp)
+    keep = dedup.keep_flags(docs, _dup_clusters(docs))
     q = textops.quality_scores(docs).select("doc_id", "passes_quality")
     return (
         keep.join(q, "doc_id")
@@ -5348,7 +5345,6 @@ def q_pagerank(spark, sf_dir):
     beyond connected components: per-iteration join+agg, lineage
     checkpoint-truncated; the oracle unrolls the identical recurrence
     as chained CTEs."""
-    from .operators import graph
 
     return (
         graph.pagerank(_pagerank_edges(spark, sf_dir), iters=5, damping=0.85)
@@ -5381,7 +5377,7 @@ def q_link_pagerank(spark, sf_dir):
     graph and hash-mismatches. Extraction is JVM regexp_extract_all
     (payload never crosses Arrow — the flagship's JVM-side coordinate
     regex design)."""
-    from .operators import graph, webops
+    from .operators import webops
 
     docs = _docs_with_urls(spark, sf_dir)
     did = F.col("doc_id")
@@ -5422,7 +5418,6 @@ def q_lpa_communities(spark, sf_dir):
     state round 4 reaches, and the DuckDB twin unrolls the identical
     integer recurrence (count → max-frequency → min-label QUALIFY
     pick per round)."""
-    from .operators import graph
 
     d = _read(spark, sf_dir, "documents")
     n = F.col("doc_id") % 120
@@ -5486,7 +5481,6 @@ def q_pagerank_topk(spark, sf_dir):
     Ordering on ROUND(pr,6) absorbs last-ulp float jitter so the
     unrolled-CTE oracle ranks identically. Convergence mode (``tol``)
     is pytest-gated (data-dependent stop is not oracle-stable)."""
-    from .operators import graph
 
     return graph.pagerank_topk(
         _pagerank_edges(spark, sf_dir), k=10, iters=7, damping=0.85
@@ -5557,7 +5551,6 @@ def q_triangle_count(spark, sf_dir):
     ordered wedge enumeration + canonical-edge closure probe; the
     oracle enumerates id-ordered triangles a<b<c relationally, which
     is the same triangle set."""
-    from .operators import graph
 
     return graph.triangle_count(_pagerank_edges(spark, sf_dir)).orderBy("node")
 
@@ -5862,7 +5855,6 @@ def q_hits(spark, sf_dir):
     over the shared synthetic link graph — hubs AND authorities per
     node; the oracle unrolls the identical recurrence as chained
     CTEs."""
-    from .operators import graph
 
     return (
         graph.hits(_pagerank_edges(spark, sf_dir), iters=5)
@@ -6254,7 +6246,6 @@ def q_shortest_hops(spark, sf_dir):
     link graph — per-round frontier join + settled anti-join. The
     oracle is INDEPENDENT: a DuckDB recursive CTE (UNION-dedup on
     (node, hop), hop-bounded) with MIN(hop) per node."""
-    from .operators import graph
 
     return graph.shortest_hops(
         _pagerank_edges(spark, sf_dir), source=0
@@ -6288,7 +6279,6 @@ def q_ppr(spark, sf_dir):
     synthetic link graph (teleport AND dangling mass restart at the
     seeds) — rank as seed proximity. Oracle: the identical recurrence
     unrolled as MATERIALIZED CTEs with repr()-injected float literals."""
-    from .operators import graph
 
     return (
         graph.pagerank_personalized(
@@ -7111,14 +7101,11 @@ ORDER BY id_a, id_b
 def q_cc_components(spark, sf_dir):
     """Connected components by alternating large-star/small-star
     (O(log n) rounds) over a deterministic chain graph derived from
-    documents — 100-node path components whose diameter (99) exceeds
-    ``dedup.connected_components``'s default 50-round budget, so this
-    fixture can ONLY be solved by the star algorithm within its 25
-    rounds: the query exercises exactly the property that makes it the
-    100 TB scale twin. Oracle: recursive-CTE closure, labels are
-    canonical (component = min node) so they are algorithm-independent."""
-    from .operators import graph
-
+    documents — 100-node path components of diameter 99, four times the
+    25-round budget, so the query exercises exactly the property (rounds
+    independent of diameter) that lets the star algorithm scale. Oracle:
+    recursive-CTE closure, labels are canonical (component = min node)
+    so they are algorithm-independent."""
     d = _read(spark, sf_dir, "documents")
     n = F.col("doc_id") % 600
     e = (
@@ -7126,7 +7113,7 @@ def q_cc_components(spark, sf_dir):
         .filter(((n + 1) % 100) != 0)
         .distinct()
     )
-    comp = graph.cc_star(e, max_rounds=25)
+    comp = graph.cc_star(e)
     return (
         comp.groupBy("component")
         .agg(F.count("*").alias("n_nodes"), F.max("node").alias("max_node"))
@@ -7161,7 +7148,6 @@ def q_random_walks(spark, sf_dir):
     replayable by the oracle's identical arithmetic. The whole walk is
     ONE declarative plan (8 chained node-keyed joins, path accumulated
     in an array column, no driver actions)."""
-    from .operators import graph
 
     return graph.random_walks(
         _pagerank_edges(spark, sf_dir), walk_len=8, walks_per_node=2
@@ -7399,33 +7385,17 @@ ORDER BY id_a, id_b
 # pytest-pinned), so don't retrain the pandas k-means twin twice
 _ANN_IVF_SQL = _sql_ann_ivf()
 
-# ordered LEAST-RECENTLY-DRIVER-CHECKED FIRST (r4 directive 2): the
-# driver's per-round window takes the head of this dict, so entries
-# whose newest CORRECTNESS row is oldest (or whose code/oracle just
-# changed) must lead. Re-sort each round from CORRECTNESS_r{N}.json.
+# name → (query, DuckDB oracle SQL). ``__spark_entry__`` iterates this
+# dict, so its order is part of the contract: keep it.
 QUERIES = {
-    # never-checked r5 addition (distributed BPE training); its window
-    # slot comes from winnow_fingerprints, whose winnowing kernel keeps
-    # an r4-green row via winnow_pairs (the geo_knn/geo_knn3 precedent)
     "bpe_merges": (q_bpe_merges, _sql_bpe(n_merges=8)),
-    # never-checked r5 addition (own-HLL sketch); slot donated by
-    # user_cardinality, whose exact distinct agg rides in-window INSIDE
-    # hll_users (same table, same grouping, same COUNT(DISTINCT) column)
     "hll_users": (q_hll_users, _sql_hll_users()),
-    # never-checked r5 addition (DSIR importance resampling); slot
-    # donated by deterministic_sample — the sampling family keeps two
-    # in-window r5 rows (weighted_sample, stratified_sample)
     "dsir_select": (q_dsir_select, SQL_DSIR_SELECT),
     "warc_ingest": (q_warc_ingest, SQL_WARC_INGEST),
     "span_dedup": (q_span_dedup, SQL_SPAN_DEDUP),
     "weighted_sample": (q_weighted_sample, SQL_WEIGHTED_SAMPLE),
     "ann_ivf_topk": (q_ivf_topk, _ANN_IVF_SQL),
     "ann_ivf_indexed": (q_ann_ivf_indexed, _ANN_IVF_SQL),
-    # ann_lsh_topk is IN the window (it has NEVER been hash-checked —
-    # its newest driver row is r2 rows-only — and it gained a
-    # materialized-plane-sign oracle this round); together with
-    # warc_ingest that costs two 3x-green veteran slots
-    # (union_slices, left_join_fill → tail)
     "ann_lsh_topk": (q_ann_lsh, _sql_ann_lsh()),
     "dedup_minhash_lsh": (q_dedup_minhash, _sql_minhash()),
     "pagerank_topk": (q_pagerank_topk, _sql_pagerank(iters=7, topk=10)),
@@ -7448,11 +7418,6 @@ QUERIES = {
     "source_rollup": (q_source_rollup, SQL_SOURCE_ROLLUP),
     "group_medians": (q_group_medians, SQL_GROUP_MEDIANS),
     "incremental_tag": (q_incremental_tag, _sql_geo_pip()),
-    # r5 window juggling: the 12 extra r5 queries pushed veterans out of
-    # the 50-entry driver window; these four have NO r4 row (newest is
-    # r<=3) so they take the slots of four r4-green entries (url_dedup,
-    # domain_stats, domain_cap, pagerank — pagerank's oracle string is
-    # identical to in-window link_pagerank's), moved to the tail below
     "dedup_ngram_jaccard": (q_dedup_jaccard, _sql_jaccard()),
     "token_stats": (q_token_stats, SQL_TOKEN_STATS),
     "quality_scores": (q_quality, SQL_QUALITY),
@@ -7473,12 +7438,6 @@ QUERIES = {
     "c4_line_filter": (q_c4_line_filter, SQL_C4_LINE_FILTER),
     "ann_pq_topk": (q_ann_pq_topk, _sql_ann_pq()),
     "ann_ivfpq_topk": (q_ann_ivfpq, _sql_ann_ivfpq()),
-    # --- 50-entry driver-window cut: below here, newest row r<=4 but
-    # 3x-green (semi_anti_join/union_slices/left_join_fill/
-    # value_histogram/lang_hits/geo_bbox/dedup_exact/geo_knn/geo_rebin —
-    # the last four displaced by the never-checked bm25_topk/hybrid_rrf/
-    # cms_heavy_hitters/bloom_semi_join; geo_knn's kernel stays covered
-    # in-window by r4-green geo_knn3) or r4-green ---
     "deterministic_sample": (q_deterministic_sample, SQL_SAMPLE),
     "user_cardinality": (q_user_cardinality, SQL_CARDINALITY),
     "sessionize": (q_sessionize, SQL_SESSIONIZE),
@@ -7506,8 +7465,6 @@ QUERIES = {
     ),
     "winnow_fingerprints": (q_winnow_fps, _sql_winnow()),
     "winnow_pairs": (q_winnow_pairs, _sql_winnow_pairs()),
-    # r5 addition awaiting its first window slot (r6 rotation);
-    # exactness meanwhile pytest-pinned against the python twin
     "bpe_vocab": (q_bpe_vocab, _sql_bpe(n_merges=8, vocab_topk=40)),
     "bpe_encode": (q_bpe_encode, _sql_bpe(n_merges=8, encode=True)),
     "image_dups": (q_image_dups, _sql_image_dups()),

@@ -294,29 +294,64 @@ def test_cc_star_path_and_isolated_edge(spark):
     assert got == exp
 
 
-def test_cc_star_matches_min_label_on_random_graph(spark):
-    from europe_gis_spark.operators import dedup
+def _union_find_components(pairs):
+    """Reference CC: driver union-find, component = min node."""
+    parent = {}
 
-    rng = np.random.default_rng(7)
-    pairs = [
-        (int(a), int(b))
-        for a, b in zip(rng.integers(0, 400, 350), rng.integers(0, 400, 350))
-        if a != b
-    ]
-    df = spark.createDataFrame(pairs, "a long, b long").coalesce(4)
-    s = {(r.node, r.component) for r in graph.cc_star(df).collect()}
-    m = {
-        (r.doc_id, r.component)
-        for r in dedup.connected_components(df, "a", "b").collect()
-    }
-    assert s == m
+    def find(k):
+        while parent[k] != k:
+            parent[k] = parent[parent[k]]
+            k = parent[k]
+        return k
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {k: find(k) for k in parent}
+
+
+def test_cc_star_matches_union_find_on_random_graphs(spark):
+    """Star CC equals a pure-Python union-find over seeded random
+    graphs with self-loops, duplicate and reversed edges, over integer
+    and string keys, on an empty edge list and on a graph that needs
+    both halves of the star-forest stop test."""
+    cases = []
+    for seed, n_nodes, n_edges in ((7, 400, 350), (11, 60, 80), (13, 30, 10)):
+        rng = np.random.default_rng(seed)
+        pairs = [
+            (int(a), int(b))
+            for a, b in zip(
+                rng.integers(0, n_nodes, n_edges),
+                rng.integers(0, n_nodes, n_edges),
+            )
+        ]
+        pairs += [(a, a) for a, _ in pairs[:5]]  # self-loops
+        pairs += pairs[:10] + [(b, a) for a, b in pairs[10:20]]
+        cases.append((pairs, "a long, b long"))
+    # string keys: order is lexicographic ("k10" < "k9"), as polygonize's
+    # zero-padded node keys rely on
+    str_pairs = [(f"k{a}", f"k{b}") for a, b in cases[1][0]]
+    cases.append((str_pairs, "a string, b string"))
+    cases.append(([], "a long, b long"))
+    # round 1 leaves node 5 with two parents (0 and 3) while no node is
+    # both a child and a parent: a stop test that skipped the
+    # two-parents check would split {3, 6} from 0's component
+    tricky = [(4, 7), (5, 7), (7, 1), (0, 4), (6, 5), (6, 3)]
+    cases.append((tricky, "a long, b long"))
+    for pairs, schema in cases:
+        df = spark.createDataFrame(pairs, schema).coalesce(4)
+        got = {r.node: r.component for r in graph.cc_star(df).collect()}
+        assert got == _union_find_components(pairs)
 
 
 def test_cc_star_log_rounds_on_long_path(spark):
-    """THE property that earns cc_star its place next to min-label
-    propagation: a 512-node path (diameter 511, far beyond
-    connected_components' 50-round budget) converges within 16 star
-    rounds (log2(512)=9 + slack) — round count scales with log n, not
+    """THE property that makes large/small-star the engine's CC: a
+    512-node path (diameter 511, far beyond what min-label propagation
+    closes in 16 rounds) converges within 16 star rounds
+    (log2(512)=9 + slack) — round count scales with log n, not
     diameter."""
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(511)], "a long, b long"

@@ -10,6 +10,7 @@ from europe_gis_spark.checkpoint import lineage
 from europe_gis_spark.datagen import geodata
 from europe_gis_spark.operators import (
     dedup,
+    graph,
     multimodal,
     similarity,
     skew,
@@ -1005,7 +1006,7 @@ def test_lsh_hot_bucket_cap_drops_boilerplate(spark):
 
 
 def test_connected_components_chain_and_islands(spark):
-    """Min-label propagation must close multi-hop chains (diameter >
+    """Connected components must close multi-hop chains (diameter >
     one round's reach is the classic CC bug) and keep islands apart."""
     pairs = spark.createDataFrame(
         pd.DataFrame(
@@ -1017,20 +1018,24 @@ def test_connected_components_chain_and_islands(spark):
             }
         )
     )
-    comp = {r.doc_id: r.component for r in dedup.connected_components(pairs).collect()}
+    comp = {
+        r.node: r.component
+        for r in graph.cc_star(pairs, "doc_a", "doc_b").collect()
+    }
     assert {comp[i] for i in (1, 2, 3, 4, 5)} == {1}
     assert comp[10] == comp[11] == 10
     assert comp[20] == comp[21] == 20
 
 
 def test_connected_components_nonconvergence_raises(spark):
-    """A diameter larger than max_iter must FAIL loudly, not return
-    silently split clusters."""
+    """A round cap too small for the graph must FAIL loudly, not return
+    silently split clusters: a 512-node path needs more than 2 star
+    rounds."""
     pairs = spark.createDataFrame(
-        pd.DataFrame({"doc_a": [1, 2, 3, 4], "doc_b": [2, 3, 4, 5]})
+        [(i, i + 1) for i in range(511)], "doc_a long, doc_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, max_iter=1)
+        graph.cc_star(pairs, "doc_a", "doc_b", max_rounds=2)
 
 
 def test_fold_session_events_late_data():

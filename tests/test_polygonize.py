@@ -97,7 +97,7 @@ def test_regions_checkerboard_no_false_merges(spark):
 
 
 def test_merge_paths_identical(spark):
-    """Driver union-find and distributed min-label propagation must
+    """Driver union-find and distributed star connected components must
     produce IDENTICAL region ids (distributed_threshold=0 forces the
     connected-components path)."""
     rng = np.random.default_rng(5)
