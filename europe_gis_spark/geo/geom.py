@@ -288,37 +288,48 @@ def is_valid_polygon(parts: list[list[np.ndarray]]) -> bool:
     return True
 
 
+def edge_near(px, py, x1, y1, x2, y2) -> np.ndarray:
+    """Elementwise (numpy broadcasting): point lies on segment
+    (x1, y1)–(x2, y2) within EPS. A zero-length segment is near only
+    points within EPS of its vertex."""
+    dx, dy = x2 - x1, y2 - y1
+    cross = (px - x1) * dy - (py - y1) * dx
+    seg2 = dx * dx + dy * dy
+    t = ((px - x1) * dx + (py - y1) * dy) / np.where(seg2 > 0, seg2, 1.0)
+    near_seg = (np.abs(cross) <= EPS * np.maximum(1.0, np.sqrt(seg2))) & (
+        t >= -EPS
+    ) & (t <= 1 + EPS)
+    near_vertex = (px - x1) ** 2 + (py - y1) ** 2 <= EPS * EPS
+    return np.where(seg2 > 0, near_seg, near_vertex)
+
+
+def edge_crossings(px, py, x1, y1, x2, y2) -> np.ndarray:
+    """Elementwise (numpy broadcasting): the ray from the point towards +x
+    crosses edge (x1, y1)–(x2, y2). Half-open rule [y1,y2) makes vertices
+    count once."""
+    cond = (y1 <= py) != (y2 <= py)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
+    return cond & (px < xint)
+
+
 def points_on_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     """Boolean mask: point lies on the ring's boundary (within EPS)."""
     x1, y1 = ring[:-1, 0], ring[:-1, 1]
     x2, y2 = ring[1:, 0], ring[1:, 1]
     on = np.zeros(len(px), dtype=bool)
     for j in range(len(x1)):
-        dx, dy = x2[j] - x1[j], y2[j] - y1[j]
-        cross = (px - x1[j]) * dy - (py - y1[j]) * dx
-        seg2 = dx * dx + dy * dy
-        t = ((px - x1[j]) * dx + (py - y1[j]) * dy) / (seg2 if seg2 > 0 else 1.0)
-        near = (np.abs(cross) <= EPS * max(1.0, np.sqrt(seg2))) & (t >= -EPS) & (
-            t <= 1 + EPS
-        )
-        on |= near
+        on |= edge_near(px, py, x1[j], y1[j], x2[j], y2[j])
     return on
 
 
 def _crossings(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     """Ray-cast crossing parity per point for one ring (vectorized over
-    points AND edges). Half-open rule [y1,y2) makes vertices count once."""
-    x1, y1 = ring[:-1, 0], ring[:-1, 1]
-    x2, y2 = ring[1:, 0], ring[1:, 1]
-    # points (n,1) against edges (1,m)
-    pyc = py[:, None]
-    pxc = px[:, None]
-    cond = (y1[None, :] <= pyc) != (y2[None, :] <= pyc)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x1[None, :] + (pyc - y1[None, :]) * (x2 - x1)[None, :] / (y2 - y1)[
-            None, :
-        ]
-    cross = cond & (pxc < xint)
+    points AND edges)."""
+    # points (n,1) against edges (m,)
+    cross = edge_crossings(
+        px[:, None], py[:, None], ring[:-1, 0], ring[:-1, 1], ring[1:, 0], ring[1:, 1]
+    )
     return cross.sum(axis=1) % 2 == 1
 
 

@@ -385,6 +385,181 @@ def test_index_assign_points_first_and_all():
         index.assign_points(idx, px, py, match="first")
 
 
+def test_zero_length_edge_does_not_swallow_points():
+    """A repeated consecutive vertex (common in real shapefiles) is a
+    zero-length edge; it is "on" only within EPS of its vertex, so a far
+    point in the polygon's cover is not assigned to it."""
+    ring = np.array([[0, 0], [10, 0], [10, 0], [10, 10], [0, 10], [0, 0]], dtype=float)
+    assert geom.is_valid_polygon([[ring]])
+    px = np.array([5.0, 10.0, 10.0 + 1e-10, 11.0, 50.0, -300.0])
+    py = np.array([5.0, 0.0, 0.0, 11.0, 50.0, 1000.0])
+    got = geom.points_in_polygon(px, py, [[ring]])
+    assert got.tolist() == [True, True, True, False, False, False]
+    idx = index.build_index([("Z", wkb.encode_polygon([ring]))], res=21)  # 4 m cells
+    assert int(cells.cell_id(11.0, 11.0, 21)) in idx.cell_to_polys  # in the cover
+    rows, ords = index.assign_points(idx, px, py, match="all")
+    assert rows.tolist() == [0, 1, 2] and ords.tolist() == [0, 0, 0]
+
+
+def _star(rng, cx, cy, k, r_lo, r_hi):
+    """Closed ring of ``k`` vertices, star-shaped about (cx, cy) (simple,
+    concave for k > 3). Angular gaps stay under 1.5·2π/k, so for k ≥ 9 the
+    ring holds the disc of radius 0.86·r_lo about the centre."""
+    ang = (np.arange(k) + rng.uniform(0, 0.5, k)) * (2 * np.pi / k)
+    r = rng.uniform(r_lo, r_hi, k)
+    ring = np.stack([cx + r * np.cos(ang), cy + r * np.sin(ang)], axis=1)
+    return np.vstack([ring, ring[:1]])
+
+
+def _random_polygons(rng, n):
+    """Overlapping polygons in a few km² of the LAEA domain: concave
+    shells, shells with holes, two-part multipolygons, triangles and
+    axis-aligned boxes on cell lines."""
+    size = cells.cell_size(cells.RES_DEFAULT)
+    x0, y0 = 4_321 * size, 3_210 * size
+    out = []
+    for i in range(n):
+        cx, cy = x0 + rng.uniform(0, 3 * size), y0 + rng.uniform(0, 3 * size)
+        kind = i % 5
+        if kind == 0:
+            parts = [[_star(rng, cx, cy, int(rng.integers(5, 12)), 100, 900)]]
+        elif kind == 1:
+            parts = [[_star(rng, cx, cy, 9, 500, 900), _star(rng, cx, cy, 6, 100, 400)]]
+        elif kind == 2:
+            parts = [
+                [_star(rng, cx, cy, 7, 100, 300)],
+                [_star(rng, cx + 1500, cy + 700, 3, 100, 300)],
+            ]
+        elif kind == 3:
+            parts = [[_star(rng, cx, cy, 3, 50, 700)]]
+        else:
+            bx, by = x0 + size * rng.integers(0, 3), y0 + size * rng.integers(0, 3)
+            w, h = size * rng.integers(1, 3), 0.5 * size
+            parts = [[np.array([[bx, by], [bx + w, by], [bx + w, by + h], [bx, by + h], [bx, by]])]]
+        out.append((f"P{i}", parts))
+    return out
+
+
+def _probe_points(rng, polys):
+    """Vertices, edge midpoints, points a fraction or a few EPS off each
+    vertex, bbox corners exactly and EPS/2 outside them, hole centres,
+    uniform points, and points outside every cover or the grid."""
+    eps = geom.EPS
+    pts = []
+    for _, parts in polys:
+        for rings in parts:
+            for ring in rings:
+                pts.append(ring)
+                pts.append((ring[:-1] + ring[1:]) / 2)
+                for d in (0.5 * eps, 1.5 * eps, 4 * eps):
+                    for sx, sy in ((1, 0), (-1, 0), (0, 1), (0, -1), (1, 1), (-1, -1)):
+                        pts.append(ring + d * np.array([sx, sy]))
+            if len(rings) > 1:
+                pts.append(rings[1][:-1].mean(axis=0, keepdims=True))
+        allv = np.concatenate([r for rings in parts for r in rings])
+        (xmin, ymin), (xmax, ymax) = allv.min(axis=0), allv.max(axis=0)
+        for d in (0.0, 0.5 * eps):
+            pts.append(
+                np.array([[xmin - d, ymin - d], [xmax + d, ymax + d], [xmin - d, (ymin + ymax) / 2],
+                          [xmax + d, (ymin + ymax) / 2], [(xmin + xmax) / 2, ymin - d],
+                          [(xmin + xmax) / 2, ymax + d]])
+            )
+    pts = np.concatenate(pts)
+    lo, hi = pts.min(axis=0), pts.max(axis=0)
+    pts = np.concatenate(
+        [pts, rng.uniform(lo, hi, (3000, 2)), [[hi[0] + 1e5, hi[1]], [-5.0, -5.0], [1e12, 3e6]]]
+    )
+    return pts[:, 0].copy(), pts[:, 1].copy()
+
+
+@pytest.mark.parametrize("seed,edge_chunk", [(1, None), (2, None), (3, 50)])
+def test_flat_probe_matches_per_polygon_oracle(seed, edge_chunk, monkeypatch):
+    """``assign_points`` (flat CSR + edge-table probe) equals a per-polygon
+    ``geom.points_in_polygon`` loop in ordinal order, for 'last' and
+    'all', including points within EPS outside a bbox (which pins the
+    probe's bbox margin), and the build's bboxes equal ``geom_bbox``.
+    One seed refines in many small steps, as large polygons do."""
+    if edge_chunk:
+        monkeypatch.setattr(index, "_EDGE_CHUNK", edge_chunk)
+    rng = np.random.default_rng(seed)
+    polys = _random_polygons(rng, 40)
+    assert all(geom.is_valid_polygon(parts) for _, parts in polys)
+    idx = index.build_index([(pid, wkb.encode_multipolygon(parts)) for pid, parts in polys])
+    assert idx.poly_ids == [pid for pid, _ in polys]
+    want_boxes = np.array([geom.geom_bbox(wkb.Geom(wkb.WKB_MULTIPOLYGON, p)) for _, p in polys])
+    start = np.arange(len(idx.edge_ring)) + idx.edge_ring  # each edge's first vertex
+    got_boxes = index._edge_bboxes(idx.verts[:, start], idx.edge_offsets)
+    np.testing.assert_array_equal(got_boxes, want_boxes)
+
+    px, py = _probe_points(rng, polys)
+    hits = np.stack([geom.points_in_polygon(px, py, parts) for _, parts in polys], axis=1)
+    want_rows, want_ords = np.nonzero(hits)  # row-major: by row, then ordinal
+    rows, ords = index.assign_points(idx, px, py, match="all")
+    np.testing.assert_array_equal(rows, want_rows)
+    np.testing.assert_array_equal(ords, want_ords)
+
+    rows, ords = index.assign_points(idx, px, py, match="last")
+    want_rows = np.flatnonzero(hits.any(axis=1))
+    want_ords = hits.shape[1] - 1 - np.argmax(hits[:, ::-1], axis=1)[want_rows]
+    np.testing.assert_array_equal(rows, want_rows)
+    np.testing.assert_array_equal(ords, want_ords)
+    assert rows.dtype == np.int64 and ords.dtype == np.int32
+    # the near-boundary points outside a bbox exist and some are hits
+    assert (hits.sum(axis=0) > 0).all()
+
+
+def test_flat_probe_degenerate_inputs():
+    """Empty (rows, ordinals) or an all-None column, never an exception:
+    an index of no valid polygon (empty key array), out-of-grid points
+    (the -1 cell sentinel), points in cells with no candidate, zero-length
+    arrays, and NaN coordinates through the batch body."""
+    from europe_gis_spark.operators import geo_join
+
+    bad = wkb.encode_polygon([np.array([[0, 0], [1, 1], [0, 0], [0, 0]], dtype=float)])
+    empty = index.build_index([("BAD", bad)], res=21)
+    assert empty.poly_ids == [] and empty.n_cells() == 0 and len(empty.keys) == 0
+    good = index.build_index([("A", wkb.encode_polygon(SQUARE))], res=21)
+    ids = np.array(good.poly_ids, dtype=object)
+    out_of_grid = (np.array([-5.0, 1e12]), np.array([1.0, 1.0]))
+    no_candidate = (np.array([500.0, 9.0]), np.array([500.0, 9.0]))
+    nothing = (np.empty(0), np.empty(0))
+    cases = [(empty, (np.array([2.0]), np.array([2.0])))]
+    cases += [(idx, pts) for idx in (empty, good) for pts in (out_of_grid, no_candidate, nothing)]
+    for idx, (px, py) in cases:
+        for match in ("last", "all"):
+            rows, ords = index.assign_points(idx, px, py, match=match)
+            assert len(rows) == 0 and len(ords) == 0
+            assert rows.dtype == np.int64 and ords.dtype == np.int32
+    # each row has a NaN coordinate; (2, 2) would be inside A
+    x = np.array([np.nan, 2.0, np.nan])
+    y = np.array([2.0, np.nan, np.nan])
+    assert geo_join._assign_batch(good, ids, x, y).tolist() == [None, None, None]
+    rows, pids = geo_join._assign_batch(good, ids, x, y, match="all")
+    assert len(rows) == 0 and len(pids) == 0
+    assert geo_join._assign_batch(good, ids, *nothing).tolist() == []
+
+
+def test_index_surface_read_by_size_reports():
+    """The index pickles (it is broadcast), and its size surface agrees
+    with the CSR arrays: n_cells, the cell_to_polys view and poly_ids."""
+    import pickle
+
+    rng = np.random.default_rng(4)
+    polys = _random_polygons(rng, 30)
+    idx = index.build_index([(pid, wkb.encode_multipolygon(parts)) for pid, parts in polys])
+    back = pickle.loads(pickle.dumps(idx))
+    assert back.poly_ids == idx.poly_ids and back.res == idx.res
+    for name in ("keys", "offsets", "ords", "boxes", "verts", "edge_ring", "edge_offsets", "ring_is_hole"):
+        np.testing.assert_array_equal(getattr(back, name), getattr(idx, name))
+    covers = [cells.cover_polygon(parts, idx.res) for _, parts in polys]
+    assert idx.n_cells() == len(np.unique(np.concatenate(covers)))
+    view = idx.cell_to_polys
+    assert sum(len(v) for v in view.values()) == len(idx.ords) == sum(len(c) for c in covers)
+    for p, cover in enumerate(covers):
+        assert all(p in view[int(c)] for c in cover)
+    assert isinstance(idx.poly_ids, list)
+
+
 # ----------------------------------------------------------- simplification
 def test_simplify_ring_drops_collinear_and_respects_tol():
     from europe_gis_spark.geo.geom import simplify_ring
