@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 CHECKPOINT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -98,7 +100,7 @@ def completed_units(
         else:
             df = spark.read.parquet(ckpt_path)
     except Exception:
-        return spark.createDataFrame([], "unit_id long")
+        return local_frame(spark, [], "unit_id long")
     return df.filter(F.col("run_id") == run_id).select("unit_id").distinct()
 
 

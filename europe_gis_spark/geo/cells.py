@@ -47,12 +47,16 @@ def cell_id(x, y, res: int):
     Out-of-domain coordinates (negative ix/iy — e.g. crawl-extracted
     points far west/south of the EPSG:3035 false origin — or beyond the
     29-bit grid) map to the -1 sentinel instead of bleeding into
-    adjacent bit fields and aliasing a valid cell."""
+    adjacent bit fields and aliasing a valid cell. So do NaN and ±inf
+    coordinates, masked before the int64 cast (whose result for them is
+    undefined)."""
     size = cell_size(res)
-    ix = np.floor(np.asarray(x, dtype=np.float64) / size).astype(np.int64)
-    iy = np.floor(np.asarray(y, dtype=np.float64) / size).astype(np.int64)
+    fx = np.floor(np.asarray(x, dtype=np.float64) / size)
+    fy = np.floor(np.asarray(y, dtype=np.float64) / size)
+    bad = ~((fx >= 0) & (fy >= 0) & (fx <= _IX_MASK) & (fy <= _IX_MASK))
+    ix = np.where(bad, 0, fx).astype(np.int64)
+    iy = np.where(bad, 0, fy).astype(np.int64)
     cid = (np.int64(res) << np.int64(58)) | (iy << np.int64(_IX_BITS)) | ix
-    bad = (ix < 0) | (iy < 0) | (ix > _IX_MASK) | (iy > _IX_MASK)
     return np.where(bad, np.int64(-1), cid)
 
 

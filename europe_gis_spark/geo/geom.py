@@ -290,13 +290,15 @@ def is_valid_polygon(parts: list[list[np.ndarray]]) -> bool:
 
 def edge_near(px, py, x1, y1, x2, y2) -> np.ndarray:
     """Elementwise (numpy broadcasting): point lies on segment
-    (x1, y1)–(x2, y2) within EPS. A zero-length segment is near only
-    points within EPS of its vertex."""
+    (x1, y1)–(x2, y2) within EPS: at most EPS from its line (|cross| is
+    the distance times the length L, so the bound is EPS·L) and at most
+    EPS·L beyond either end. A zero-length segment is near only points
+    within EPS of its vertex."""
     dx, dy = x2 - x1, y2 - y1
     cross = (px - x1) * dy - (py - y1) * dx
     seg2 = dx * dx + dy * dy
     t = ((px - x1) * dx + (py - y1) * dy) / np.where(seg2 > 0, seg2, 1.0)
-    near_seg = (np.abs(cross) <= EPS * np.maximum(1.0, np.sqrt(seg2))) & (
+    near_seg = (np.abs(cross) <= EPS * np.sqrt(seg2)) & (
         t >= -EPS
     ) & (t <= 1 + EPS)
     near_vertex = (px - x1) ** 2 + (py - y1) ** 2 <= EPS * EPS

@@ -99,20 +99,17 @@ def _probe_margin(edges, edge_offsets: np.ndarray, bboxes: np.ndarray) -> np.nda
     even number of times), so the margin must bound how far from an
     edge ``geom.edge_near`` still calls a point "on". For an edge of
     length L > 0 it accepts
-      |cross| = L·dist ≤ EPS·max(1, L)  →  dist ≤ EPS·max(1, L)/L across it,
-      −EPS ≤ t ≤ 1 + EPS               →  up to EPS·L beyond either end,
-    so such a point is at most EPS·(L + max(1, 1/L)) outside the edge's
-    bbox; a zero-length edge accepts points within EPS of its vertex. The
-    margin is twice the largest of these over the polygon's edges (slack
-    for rounding in cross and t), plus four ulps of the polygon's largest
-    coordinate (slack for the rounded ray intersection ``xint``).
+      |cross| = L·dist ≤ EPS·L  →  dist ≤ EPS across it,
+      −EPS ≤ t ≤ 1 + EPS       →  up to EPS·L beyond either end,
+    so such a point is at most EPS·(L + 1) outside the edge's bbox; a
+    zero-length edge accepts points within EPS of its vertex, the same
+    bound at L = 0. The margin is twice the largest of these over the
+    polygon's edges (slack for rounding in cross and t), plus four ulps
+    of the polygon's largest coordinate (slack for the rounded ray
+    intersection ``xint``).
     """
     dx, dy = edges[2] - edges[0], edges[3] - edges[1]
-    length = np.sqrt(dx * dx + dy * dy)
-    with np.errstate(divide="ignore"):
-        reach = np.where(
-            length > 0, geom.EPS * (length + np.maximum(1.0, 1.0 / length)), geom.EPS
-        )
+    reach = geom.EPS * (np.sqrt(dx * dx + dy * dy) + 1.0)
     return 2.0 * np.maximum.reduceat(reach, edge_offsets[:-1]) + 4.0 * np.spacing(
         np.abs(bboxes).max(axis=1)
     )

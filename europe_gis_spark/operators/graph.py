@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import local_frame
+
 
 #: above this node count the per-round rank snapshot moves from
 #: executor-memory ``localCheckpoint`` to reliable disk ``checkpoint``
@@ -357,9 +359,9 @@ def shortest_hops(
         .localCheckpoint(eager=True)
     )
     spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(source, 0)], schema="node long, hop int"
-    ).localCheckpoint(eager=True)
+    dist = local_frame(spark, [(source, 0)], "node long, hop int").localCheckpoint(
+        eager=True
+    )
     frontier = dist.select("node")
     for i in range(1, max_iters + 1):
         nxt = (
@@ -369,7 +371,7 @@ def shortest_hops(
             .join(dist.select("node"), "node", "left_anti")
             .localCheckpoint(eager=True)
         )
-        if nxt.rdd.isEmpty():
+        if nxt.isEmpty():
             return dist
         dist = dist.union(
             nxt.select("node", F.lit(i).cast("int").alias("hop"))

@@ -26,6 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 BAD_VALUE = -1000.0
 
 
@@ -356,17 +358,7 @@ def _label_mapping(
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     merged = [(k, find(k)) for k in list(parent)]
-    return (
-        spark.createDataFrame(
-            pd.DataFrame(merged, columns=["node", "root"])
-            if merged
-            else pd.DataFrame(
-                {"node": pd.Series(dtype=str), "root": pd.Series(dtype=str)}
-            ),
-            schema="node string, root string",
-        ),
-        True,
-    )
+    return local_frame(spark, merged, "node string, root string"), True
 
 
 def _with_region_id(

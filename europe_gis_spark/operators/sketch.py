@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 CMS_DEPTH = 4
 CMS_WIDTH = 1024
 
@@ -186,7 +188,7 @@ def bloom_semi_join(
         words[p // 64] |= 1 << (p % 64)
     words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
     spark = fact.sparkSession
-    bits_df = spark.createDataFrame([(words,)], "__bloom_words: array<bigint>")
+    bits_df = local_frame(spark, [(words,)], "__bloom_words: array<bigint>")
     key = F.col(fact_key).cast("string")
     pruned = fact.crossJoin(F.broadcast(bits_df))
     pos_cols = []

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 
 # tiny per-language marker word lists for the n-gram/wordlist heuristic
@@ -1031,8 +1033,10 @@ def bpe_train(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     k chained replaces from scratch.
     """
     out, words = _bpe_iterate(docs, n_merges)
-    return docs.sparkSession.createDataFrame(
-        out, "merge_rank INT, lft STRING, rgt STRING, pair_count BIGINT"
+    return local_frame(
+        docs.sparkSession,
+        out,
+        "merge_rank INT, lft STRING, rgt STRING, pair_count BIGINT",
     ).orderBy("merge_rank")
 
 

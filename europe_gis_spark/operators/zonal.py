@@ -17,7 +17,9 @@ zero Python in the hot path:
     (``scripts/jobs/dataset_creation.py:230-266``)
 
 Long-form cell tables ``(layer, y, x, value)`` are the relational raster
-model; tiled tables explode to long form via ``posexplode`` (JVM-side).
+model; tiled tables explode to long form via ``posexplode`` and cells
+assemble into tiles via ``map_from_entries`` + ``transform``, both
+JVM-side.
 """
 
 from __future__ import annotations
@@ -54,40 +56,33 @@ def cells_to_tiles(
     row-major tile arrays, grouped by (layer, tile_row, tile_col).
 
     The groupBy is the one shuffle of the ingest job (the distributed
-    analogue of ``raster2pgsql -t 1000x1000``, echo/dem.bat:1); the
-    array assembly is numpy inside applyInPandas.
+    analogue of ``raster2pgsql -t 1000x1000``, echo/dem.bat:1); each
+    tile is assembled JVM-side as a slot → value map read back slot by
+    slot, ``fill`` where no cell landed. Tiles are floor-divided, so a
+    negative x or y lands in tile −1, … and ``tiles_to_cells`` inverts
+    every cell. A slot given two values raises (Spark's
+    DUPLICATED_MAP_KEY) instead of keeping an arbitrary one; a NULL
+    value becomes NaN, as it would through pandas.
     """
-
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        layer, trow, tcol = key
-        block = np.full(tile_w * tile_w, fill, dtype=np.float32)
-        iy = pdf["y"].to_numpy() - trow * tile_w
-        ix = pdf["x"].to_numpy() - tcol * tile_w
-        block[iy * tile_w + ix] = pdf["value"].to_numpy(dtype=np.float32)
-        return pd.DataFrame(
-            {
-                "layer": [layer],
-                "tile_row": [trow],
-                "tile_col": [tcol],
-                "tile": [block.tolist()],
-            }
-        )
-
-    import pandas as pd
-
-    return (
-        cells.select("layer", "y", "x", "value")
-        .groupBy(
+    y, x = F.col("y"), F.col("x")
+    slot = F.pmod(y, tile_w) * tile_w + F.pmod(x, tile_w)
+    value = F.coalesce(F.col("value").cast("float"), F.lit(float("nan")).cast("float"))
+    slots = (
+        cells.groupBy(
             "layer",
-            (F.col("y") / tile_w).cast("int").alias("tile_row"),
-            (F.col("x") / tile_w).cast("int").alias("tile_col"),
+            F.floor(y / tile_w).cast("int").alias("tile_row"),
+            F.floor(x / tile_w).cast("int").alias("tile_col"),
         )
-        .applyInPandas(
-            fn,
-            schema="layer string, tile_row int, tile_col int, tile array<float>",
-        )
+        .agg(F.map_from_entries(F.collect_list(F.struct(slot, value))).alias("m"))
+    )
+    return slots.select(
+        "layer",
+        "tile_row",
+        "tile_col",
+        F.transform(
+            F.sequence(F.lit(0), F.lit(tile_w * tile_w - 1)),
+            lambda i: F.coalesce(F.col("m")[i], F.lit(fill).cast("float")),
+        ).alias("tile"),
     )
 
 

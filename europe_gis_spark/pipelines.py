@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from .checkpoint import lineage
 from .operators import geo_join, layers as L, popgrid, windows, zonal
+from .session import local_frame
 
 
 def process_raster_layers(
@@ -56,7 +57,7 @@ def process_raster_layers(
     )
 
     # population raster path (one unit)
-    pop_unit = spark.createDataFrame([(0,)], "unit_id long")
+    pop_unit = local_frame(spark, [(0,)], "unit_id long")
 
     def run_pop(pending: DataFrame) -> DataFrame:
         attrs = popgrid.read_attr_csvs(spark, attr_csv_paths)

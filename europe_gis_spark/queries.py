@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from .datagen.geodata import AA_X0, AA_Y0
 from .geo import wkb
 from .operators import dedup, geo_join, graph, knn, similarity, textops
+from .session import local_frame
 
 # --------------------------------------------------------------------------
 # deterministic geo constants (definitions shared by Spark and the oracles)
@@ -148,6 +149,10 @@ def _halfplane_sql(verts) -> str:
 def _poly_wkb(verts) -> bytes:
     ring = np.array(list(verts) + [verts[0]], dtype=np.float64)
     return wkb.encode_polygon([ring])
+
+
+#: the (id, WKB) polygon table ``geo_join.build_polygon_index_bc`` reads
+POLYS_SCHEMA = "nuts_id string, geometry binary"
 
 
 # --------------------------------------------------------------------------
@@ -749,11 +754,7 @@ def q_geo_pip(spark, sf_dir):
     """Cell-bucketed PIP join (J3/J6): region assignment + counts."""
     pts = event_points(spark, sf_dir)
     polys = [(pid, _poly_wkb(v)) for pid, v in PIP_POLYS]
-    import pandas as pd
-
-    polys_df = spark.createDataFrame(
-        pd.DataFrame(polys, columns=["nuts_id", "geometry"])
-    )
+    polys_df = local_frame(spark, polys, POLYS_SCHEMA)
     idx_bc = geo_join.build_polygon_index_bc(spark, polys_df)
     assigned = geo_join.assign_polygons(
         pts, idx_bc, keep_cols=("event_id", "value")
@@ -785,8 +786,6 @@ def q_incremental_tag(spark, sf_dir):
     import shutil
     import tempfile
 
-    import pandas as pd
-
     from .streaming import incremental
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
@@ -801,9 +800,7 @@ def q_incremental_tag(spark, sf_dir):
     # mapInPandas on one core (events parquet is one row group)
     pts.repartition(spark.sparkContext.defaultParallelism).write.parquet(src)
     polys = [(pid, _poly_wkb(v)) for pid, v in PIP_POLYS]
-    polys_df = spark.createDataFrame(
-        pd.DataFrame(polys, columns=["nuts_id", "geometry"])
-    )
+    polys_df = local_frame(spark, polys, POLYS_SCHEMA)
     idx_bc = geo_join.build_polygon_index_bc(spark, polys_df)
     for _ in range(2):  # second drain: exactly-once no-op
         stream = spark.readStream.schema(pts.schema).parquet(src)
@@ -828,14 +825,11 @@ def q_geo_pip_shuffle(spark, sf_dir):
     the LAU-scale path when the polygon side outgrows the broadcast
     budget. Shares q_geo_pip's oracle: both paths must produce
     identical region assignments."""
-    import pandas as pd
-
     pts = event_points(spark, sf_dir)
-    polys_df = spark.createDataFrame(
-        pd.DataFrame(
-            [(pid, _poly_wkb(v), i) for i, (pid, v) in enumerate(PIP_POLYS)],
-            columns=["nuts_id", "geometry", "burn"],
-        )
+    polys_df = local_frame(
+        spark,
+        [(pid, _poly_wkb(v), i) for i, (pid, v) in enumerate(PIP_POLYS)],
+        POLYS_SCHEMA + ", burn long",
     )
     assigned = geo_join.pip_join_shuffle(
         pts, polys_df, keep_cols=("event_id", "value")
@@ -872,11 +866,7 @@ def q_geo_burn_values(spark, sf_dir):
     (raster_processor.py:279-291 burns TOT_P values with replace)."""
     pts = event_points(spark, sf_dir)
     polys = [(pid, _poly_wkb(v)) for pid, v in PIP_POLYS]
-    import pandas as pd
-
-    polys_df = spark.createDataFrame(
-        pd.DataFrame(polys, columns=["nuts_id", "geometry"])
-    )
+    polys_df = local_frame(spark, polys, POLYS_SCHEMA)
     idx_bc = geo_join.build_polygon_index_bc(spark, polys_df)
     assigned = geo_join.assign_polygons(
         pts, idx_bc, keep_cols=("event_id",), match="last"
@@ -915,11 +905,7 @@ def q_geo_border(spark, sf_dir):
         (pid, _poly_wkb([(x0, y0), (x1, y0), (x1, y1), (x0, y1)]))
         for pid, x0, y0, x1, y1 in BORDER_RECTS
     ]
-    import pandas as pd
-
-    polys_df = spark.createDataFrame(
-        pd.DataFrame(polys, columns=["nuts_id", "geometry"])
-    )
+    polys_df = local_frame(spark, polys, POLYS_SCHEMA)
     idx_bc = geo_join.build_polygon_index_bc(spark, polys_df)
     pairs = geo_join.assign_polygons(
         pts, idx_bc, keep_cols=("event_id",), match="all"
@@ -992,9 +978,7 @@ def q_geo_within_dist(spark, sf_dir):
     dist, 3×3 right replication, exact refine) — every (point, anchor)
     pair within 6 km; exhaustive cross-join oracle."""
     pts = event_points(spark, sf_dir).filter(F.col("event_id") % 7 == 0)
-    anchors = spark.createDataFrame(
-        [(a, x, y) for a, x, y in KNN_ANCHORS], "anchor_id string, x double, y double"
-    )
+    anchors = local_frame(spark, KNN_ANCHORS, "anchor_id string, x double, y double")
     out = knn.within_distance_join(pts, anchors, dist=6000.0)
     return out.select(
         "event_id", "anchor_id", F.round("dist", 6).alias("dist")
@@ -3455,8 +3439,6 @@ def q_od_matrix(spark, sf_dir):
     counter — the region-to-region flow table urban-mobility and
     audience-migration analyses start from. Stays ride one user
     window; transitions one more lag window + (from, to) agg."""
-    import pandas as pd
-
     from .operators import trajectory
 
     ev = _read(spark, sf_dir, "events")
@@ -3476,9 +3458,7 @@ def q_od_matrix(spark, sf_dir):
         F.col("cy").alias("y"),
     )
     polys = [(pid, _poly_wkb(v)) for pid, v in PIP_POLYS]
-    polys_df = spark.createDataFrame(
-        pd.DataFrame(polys, columns=["nuts_id", "geometry"])
-    )
+    polys_df = local_frame(spark, polys, POLYS_SCHEMA)
     idx_bc = geo_join.build_polygon_index_bc(spark, polys_df)
     assigned = geo_join.assign_polygons(
         stays, idx_bc, keep_cols=("user_id", "start_ts")
@@ -3730,8 +3710,6 @@ def q_stay_regions(spark, sf_dir):
     'which regions do users actually stay in' rollup. Oracle: the
     stay-point CTE chain feeding the same reversed half-plane CASE
     as the flagship PIP oracle."""
-    import pandas as pd
-
     from .operators import trajectory
 
     ev = _read(spark, sf_dir, "events")
@@ -3750,9 +3728,7 @@ def q_stay_regions(spark, sf_dir):
         F.col("cy").alias("y"),
     )
     polys = [(pid, _poly_wkb(v)) for pid, v in PIP_POLYS]
-    polys_df = spark.createDataFrame(
-        pd.DataFrame(polys, columns=["nuts_id", "geometry"])
-    )
+    polys_df = local_frame(spark, polys, POLYS_SCHEMA)
     idx_bc = geo_join.build_polygon_index_bc(spark, polys_df)
     assigned = geo_join.assign_polygons(stays, idx_bc, keep_cols=("user_id",))
     return (
@@ -5044,16 +5020,14 @@ def q_idw_surface(spark, sf_dir):
             (F.col("yb") * 2000.0 + 1000.0).alias("cy"),
         )
     )
-    import pandas as pd
 
-    anchors = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                (pid, x - AA_X0, y - AA_Y0, 10.0 * (i + 1))
-                for i, (pid, x, y) in enumerate(KNN_ANCHORS)
-            ],
-            columns=["anchor_id", "ax", "ay", "val"],
-        )
+    anchors = local_frame(
+        spark,
+        [
+            (pid, x - AA_X0, y - AA_Y0, 10.0 * (i + 1))
+            for i, (pid, x, y) in enumerate(KNN_ANCHORS)
+        ],
+        "anchor_id string, ax double, ay double, val double",
     )
     d2 = (F.col("cx") - F.col("ax")) * (F.col("cx") - F.col("ax")) + (
         F.col("cy") - F.col("ay")
@@ -5104,8 +5078,6 @@ def q_voronoi_assign(spark, sf_dir):
     The per-cell pick is a WindowGroupLimit-eligible rank-1 filter
     over the broadcast anchor cross; at corpus-scale anchor counts
     the cell-ring kNN (geo_knn) replaces the cross, same downstream."""
-    import pandas as pd
-
     from pyspark.sql.window import Window
 
     pts = event_points(spark, sf_dir)
@@ -5120,11 +5092,10 @@ def q_voronoi_assign(spark, sf_dir):
         (F.col("xb") * 2000.0 + 1000.0).alias("cx"),
         (F.col("yb") * 2000.0 + 1000.0).alias("cy"),
     )
-    anchors = spark.createDataFrame(
-        pd.DataFrame(
-            [(pid, x - AA_X0, y - AA_Y0) for pid, x, y in KNN_ANCHORS],
-            columns=["anchor_id", "ax", "ay"],
-        )
+    anchors = local_frame(
+        spark,
+        [(pid, x - AA_X0, y - AA_Y0) for pid, x, y in KNN_ANCHORS],
+        "anchor_id string, ax double, ay double",
     )
     d2 = (F.col("cx") - F.col("ax")) * (F.col("cx") - F.col("ax")) + (
         F.col("cy") - F.col("ay")
@@ -5278,11 +5249,9 @@ def q_robots_allowed(spark, sf_dir):
     politeness gate ahead of every other curation op. Decisions are
     computed on DISTINCT urls and broadcast-joined against the rules
     corpus; page payload never enters the match."""
-    import pandas as pd
-
     from .operators import webops
 
-    rules = spark.createDataFrame(pd.DataFrame(ROBOTS_RULES, columns=["host", "prefix", "allow"]))
+    rules = local_frame(spark, ROBOTS_RULES, "host string, prefix string, allow boolean")
     return webops.robots_decisions(_docs_with_urls(spark, sf_dir), rules).orderBy(
         "url"
     )

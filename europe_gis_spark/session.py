@@ -19,7 +19,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS = 10_000
@@ -82,3 +85,19 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """Driver-side rows (tuples in the column order of the DDL string
+    ``schema``) as a DataFrame whose plan is a ``LocalTableScan``.
+
+    The rows go to the JVM as one ``pyarrow.Table``, empty or not.
+    ``createDataFrame`` on a list, and on an EMPTY pandas frame even with
+    Arrow on, instead parallelizes pickled rows: a PythonRDD stage that
+    starts a Python daemon and its workers only to unpickle them.
+    """
+    struct = DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, row)) for row in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)

@@ -316,6 +316,26 @@ def test_cell_id_out_of_domain_is_sentinel():
     assert ok[0] > 0
 
 
+def test_non_finite_points_map_to_sentinel_without_a_cast():
+    """NaN and ±inf coordinates are the -1 cell, masked before the int64
+    cast (an invalid-cast RuntimeWarning is an error here), so
+    ``assign_points`` called directly, without ``_assign_batch``'s
+    finite filter, assigns them nothing."""
+    import warnings
+
+    bad = [np.nan, np.inf, -np.inf]
+    x = np.array(bad + [2.0] * 3 + [2.0])
+    y = np.array([2.0] * 3 + bad + [2.0])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        cid = cells.cell_id(x, y, 21)
+        assert cid[:6].tolist() == [-1] * 6 and cid[6] == cells.cell_id(2.0, 2.0, 21)
+        idx = index.build_index([("A", wkb.encode_polygon(SQUARE))], res=21)
+        for match in ("last", "all"):
+            rows, ords = index.assign_points(idx, x, y, match=match)
+            assert rows.tolist() == [6] and ords.tolist() == [0]
+
+
 def test_proj_roundtrip():
     lons = np.array([10.0, -5.2, 24.9, 10.0])
     lats = np.array([52.0, 40.1, 60.3, 35.0])
@@ -399,6 +419,26 @@ def test_zero_length_edge_does_not_swallow_points():
     assert int(cells.cell_id(11.0, 11.0, 21)) in idx.cell_to_polys  # in the cover
     rows, ords = index.assign_points(idx, px, py, match="all")
     assert rows.tolist() == [0, 1, 2] and ords.tolist() == [0, 0, 0]
+
+
+def test_short_edge_tolerance_is_a_distance():
+    """An edge of length L < 1 (a near-duplicate vertex) is "on" only
+    within EPS of its line, not EPS/L: with L = 1e-12 the old bound
+    reached 1 km across it. The bottom edge lies mid-cell, so the point
+    1 m below it is in the polygon's cover and reaches the exact test."""
+    x0, y0 = 102.0, 102.0  # 4 m cells at res 21: the edge y = 102 is mid-cell
+    ring = np.array(
+        [[0, 0], [10, 0], [10 + 1e-12, 0], [10, 10], [0, 10], [0, 0]], dtype=float
+    ) + [x0, y0]
+    assert geom.is_valid_polygon([[ring]])
+    px = x0 + np.array([10.0, 10.0, 10.0, 5.0, 5.0, 10.0])
+    py = y0 + np.array([-1.0, -99.0, 5.0, 0.0, -5e-10, 0.0])
+    want = [False, False, True, True, True, True]
+    assert geom.points_in_polygon(px, py, [[ring]]).tolist() == want
+    idx = index.build_index([("S", wkb.encode_polygon([ring]))], res=21)
+    assert int(cells.cell_id(px[0], py[0], 21)) in idx.cell_to_polys  # in the cover
+    rows, ords = index.assign_points(idx, px, py, match="all")
+    assert rows.tolist() == [2, 3, 4, 5] and ords.tolist() == [0, 0, 0, 0]
 
 
 def _star(rng, cx, cy, k, r_lo, r_hi):
