@@ -14,4 +14,9 @@ Design rules (see SURVEY.md):
     per-partition checkpoint table.
 """
 
+from . import _worker_imports
+
 __version__ = "0.1.0"
+
+# in a Spark Python worker, stop each task re-reading unchanged zip archives
+_worker_imports.install()

@@ -22,6 +22,7 @@ overwrites the same output partition (dynamic partition overwrite).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -93,13 +94,24 @@ def checkpoint_merge_sql(table: str, updates_view: str = "ckpt_updates") -> str:
 def completed_units(
     spark: SparkSession, ckpt_path: str, run_id: str, fmt: str = "parquet"
 ) -> DataFrame:
-    """Unit ids already checkpointed for this run (empty if no table)."""
+    """Unit ids already checkpointed for this run (empty if no table).
+
+    Only a missing table, path or committed part file (a first checkpoint
+    write killed before its commit leaves just ``_temporary/``) means
+    "nothing done yet"; any other read error, such as a corrupt part file,
+    propagates, so a resume never silently redoes every unit on top of a
+    broken table."""
+    iceberg = fmt == "iceberg"
     try:
-        if fmt == "iceberg":
-            df = spark.read.table(ckpt_path)
-        else:
-            df = spark.read.parquet(ckpt_path)
-    except Exception:
+        df = spark.read.table(ckpt_path) if iceberg else spark.read.parquet(ckpt_path)
+    except AnalysisException as e:
+        empty = (
+            ("TABLE_OR_VIEW_NOT_FOUND",)
+            if iceberg
+            else ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+        )
+        if e.getCondition() not in empty:
+            raise
         return local_frame(spark, [], "unit_id long")
     return df.filter(F.col("run_id") == run_id).select("unit_id").distinct()
 

@@ -4,6 +4,7 @@ mid-run') and the batched-inference write-back pipeline (W4 + P9)."""
 import numpy as np
 import pandas as pd
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from europe_gis_spark.checkpoint import lineage
@@ -52,6 +53,29 @@ def test_resume_after_midrun_crash(spark, tmp_path):
     assert got == {(i, i * 10) for i in range(10)}
     # rerunning again is a no-op (idempotent)
     assert lineage.run_with_checkpoint(spark, units, process, out, ckpt, "runX") == 0
+
+
+def test_corrupt_checkpoint_part_raises(spark, tmp_path):
+    """A corrupt part file in the checkpoint table must fail the resume,
+    not read as "no unit done" (which redoes every unit and appends to
+    the broken table)."""
+    ckpt = tmp_path / "ckpt"
+    done = spark.range(3, numPartitions=1).select(
+        F.col("id").alias("unit_id"), F.lit(1).alias("row_count")
+    )
+    lineage.write_checkpoint(spark, done, str(ckpt), "runK")
+    (part,) = ckpt.glob("part-*.parquet")
+    part.write_bytes(part.read_bytes()[:16])  # a torn write
+    with pytest.raises(Py4JJavaError):
+        lineage.completed_units(spark, str(ckpt), "runK").collect()
+
+
+def test_uncommitted_first_checkpoint_reads_as_empty(spark, tmp_path):
+    """A first checkpoint write killed before its commit leaves only
+    ``_temporary/``: no unit is done, and the resume runs them all."""
+    ckpt = tmp_path / "ckpt"
+    (ckpt / "_temporary" / "0").mkdir(parents=True)
+    assert lineage.completed_units(spark, str(ckpt), "runT").collect() == []
 
 
 def test_checkpoint_compaction_preserves_resume(spark, tmp_path):
