@@ -328,23 +328,3 @@ def cover_polygon(
     if not covers:
         return np.empty(0, dtype=np.int64)
     return np.unique(np.concatenate(covers))
-
-
-def adaptive_cover(
-    parts: list[list[np.ndarray]],
-    res_coarse: int,
-    res_fine: int,
-    budget: int = 4096,
-) -> np.ndarray:
-    """Budgeted cover: start at ``res_coarse`` and re-cover wholesale at
-    successively finer resolutions while the next refinement stays under
-    ``budget`` total cells. The returned cover is a SINGLE uniform
-    resolution (the finest affordable one) — callers probe exactly one
-    res. Mirrors the adaptive cell-splitting strategy for hot cells
-    (SURVEY.md §4 custom item 2) applied at index build time."""
-    cur = cover_polygon(parts, res_coarse)
-    res = res_coarse
-    while res < res_fine and len(cur) * 4 <= budget:
-        res += 1
-        cur = cover_polygon(parts, res)
-    return cur

@@ -19,6 +19,10 @@ data_engineering/raster_processor.py:154-188, 269-291``) and PostGIS
 The broadcast index is probed inside pandas UDFs; Spark's broadcast
 machinery unpickles it once per Python worker process, not per task
 (SURVEY.md §7.4 risk 6).
+
+When the polygon side is too large to broadcast, ``pip_join_shuffle``
+runs the same kernel (``_assign_batch`` over a ``PolyIndex``) as one
+local join per (coarse cell, salt) group instead.
 """
 
 from __future__ import annotations
@@ -241,42 +245,13 @@ def pages_per_region(
     )
 
 
-def polygon_cover_df(
-    polygons_df: DataFrame,
-    id_col: str = "nuts_id",
-    geom_col: str = "geometry",
-    burn_col: str = "burn",
-    res: int = gcells.RES_DEFAULT,
-) -> DataFrame:
-    """Distributed cover-cell table: one row per (cover cell, polygon) —
-    the shuffle-join twin of the driver-built PolyIndex, for polygon
-    sets too large to broadcast (LAU 1e5+, ~600 MB decoded). Decode +
-    validity + cover run inside mapInPandas; the caller supplies an
-    explicit ``burn_col`` (int) because a distributed table has no
-    input order — last-wins needs it stated, not implied."""
-    from ..geo import geom as ggeom, wkb as gwkb
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            cells_out, pids, burns = [], [], []
-            for pid, burn, buf in zip(b[id_col], b[burn_col], b[geom_col]):
-                parts = gwkb.polygon_parts(gwkb.decode(bytes(buf)))
-                if not ggeom.is_valid_polygon(parts):
-                    continue
-                cov = gcells.cover_polygon(parts, res)
-                cells_out.append(cov)
-                pids.extend([pid] * len(cov))
-                burns.extend([burn] * len(cov))
-            cell_arr = (
-                np.concatenate(cells_out) if cells_out else np.empty(0, np.int64)
-            )
-            yield pd.DataFrame(
-                {"cell": cell_arr, "poly_id": pids, "burn": burns}
-            )
-
-    return polygons_df.select(id_col, burn_col, geom_col).mapInPandas(
-        fn, schema="cell long, poly_id string, burn long"
-    )
+# salts per group key: a hot cell's points split over this many groups
+# (tasks), each holding the same polygons; 8 is the only count in use
+_N_SALT = 8
+# levels from the index cells up to the group key: at the default res 13
+# a key is a 16 km cell, so an LAU-sized polygon lands in a few groups
+# while each group's index stays small
+_KEY_LEVELS = 4
 
 
 def pip_join_shuffle(
@@ -287,101 +262,95 @@ def pip_join_shuffle(
     geom_col: str = "geometry",
     burn_col: str = "burn",
     res: int = gcells.RES_DEFAULT,
-    n_salt: int = 8,
 ) -> DataFrame:
-    """Cell-bucketed SHUFFLE spatial join — the no-broadcast scale path
-    the north-star names ("cell-bucketed hash join plus exact
-    point-in-polygon refinement") for when the polygon side outgrows
-    the broadcast budget (ARCHITECTURE.md §2 fallback).
+    """Cell-bucketed SHUFFLE spatial join: the no-broadcast scale path
+    ("cell-bucketed hash join plus exact point-in-polygon refinement")
+    for polygon sets that outgrow the broadcast budget (ARCHITECTURE.md
+    §2). Same index and probe as the broadcast path, one local join per
+    group instead of one global index:
 
-    Stages (3 wide ops vs the broadcast path's 1 — the documented price
-    of dropping the broadcast):
-      1. points gain a cell id map-side; cover table from
-         :func:`polygon_cover_df`; candidate pairs via a cell-keyed
-         join pinned ``shuffle_hash`` (the planner must never try to
-         broadcast either corpus-scale side).
-      2. exact ray-cast refine via COGROUP on (poly_id, salt):
-         geometry ships ONCE per group — never duplicated per candidate
-         pair — and the salt splits hot polygons (a capital-city
-         polygon at crawl scale) across ``n_salt`` independent tasks.
-      3. last-wins burn order (MergeAlg.replace parity with the
-         broadcast path): max_by(poly_id, burn) per point, then a left
-         join back so unmatched points keep poly_id = NULL.
+      1. each point gets a group key, the ancestor ``_KEY_LEVELS`` levels
+         above its res-``res`` cell, plus a salt ``pmod(xxhash64(x, y),
+         _N_SALT)``; points with no cell share key -1, which no polygon has;
+      2. one ``mapInPandas`` over polygon batches builds a PolyIndex per
+         batch and reads each polygon's keys off its CSR cover, so the
+         polygon (row: key, poly_id, burn, geometry) is replicated to every
+         group its cover touches, times every salt (a broadcast
+         ``range(_N_SALT)``);
+      3. ``cogroup(key, salt)`` sorts a group's polygons by burn, builds
+         their PolyIndex and probes the group's points with
+         ``_assign_batch``. Every point is in exactly one group, and every
+         polygon whose cover holds the point's cell is in that group, so
+         last-wins (the highest burn, MergeAlg.replace as on the broadcast
+         path) is decided there; a miss keeps poly_id NULL.
 
-    ``keep_cols`` must uniquely key a point row (used for the last-wins
-    regroup and the NULL-fill join).
+    The caller supplies ``burn_col`` (int) because a distributed table has
+    no input order: last-wins needs it stated, not implied. Returns
+    (keep_cols…, x, y, poly_id), one row per point.
     """
-    from ..geo import geom as ggeom, wkb as gwkb
-
-    pts = points
-    if "cell" not in pts.columns:
-
-        def add_cell(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for b in batches:
-                x = b["x"].to_numpy(dtype=np.float64, na_value=np.nan)
-                y = b["y"].to_numpy(dtype=np.float64, na_value=np.nan)
-                out = b.copy()
-                ok = np.isfinite(x) & np.isfinite(y)
-                cid = np.full(len(b), -1, dtype=np.int64)
-                if ok.any():
-                    cid[ok] = gcells.cell_id(x[ok], y[ok], res)
-                out["cell"] = cid
-                yield out
-
-        in_cols = list(keep_cols) + ["x", "y"]
-        schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in pts.select(*in_cols).schema.fields
-        ) + ", cell bigint"
-        pts = pts.select(*in_cols).mapInPandas(add_cell, schema=schema)
-
-    cover = polygon_cover_df(
-        polygons_df, id_col=id_col, geom_col=geom_col, burn_col=burn_col, res=res
+    key_res = res - _KEY_LEVELS
+    in_cols = list(keep_cols) + ["x", "y"]
+    pts_schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in points.select(*in_cols).schema.fields
     )
-    pairs = pts.join(cover.hint("shuffle_hash"), "cell").withColumn(
-        "salt", F.pmod(F.xxhash64("x", "y"), F.lit(n_salt))
+
+    def point_keys(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            x = b["x"].to_numpy(dtype=np.float64, na_value=np.nan)
+            y = b["y"].to_numpy(dtype=np.float64, na_value=np.nan)
+            cid = gcells.cell_id(x, y, res)
+            ok = cid >= 0
+            key = np.full(len(b), -1, dtype=np.int64)
+            key[ok] = gcells.parent(cid[ok], key_res)
+            yield b.assign(key=key)
+
+    def polygon_keys(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            geoms = [bytes(g) for g in b[geom_col]]
+            idx = gindex.build_index(list(enumerate(geoms)), res=res)
+            row = np.array(idx.poly_ids, dtype=np.int64)[idx.ords]
+            key = gcells.parent(np.repeat(idx.keys, np.diff(idx.offsets)), key_res)
+            key, row = np.unique(np.stack([key, row]), axis=1)
+            yield pd.DataFrame(
+                {
+                    "key": key,
+                    "poly_id": b[id_col].to_numpy()[row],
+                    "burn": b[burn_col].to_numpy()[row],
+                    "geometry": [geoms[i] for i in row],
+                }
+            )
+
+    pts = (
+        points.select(*in_cols)
+        .mapInPandas(point_keys, schema=pts_schema + ", key bigint")
+        .withColumn("salt", F.pmod(F.xxhash64("x", "y"), F.lit(_N_SALT)))
     )
-    salts = pairs.sparkSession.range(n_salt).select(
-        F.col("id").alias("salt")
-    )
-    geoms = (
-        polygons_df.select(
-            F.col(id_col).alias("poly_id"), F.col(geom_col).alias("geometry")
+    salts = points.sparkSession.range(_N_SALT).select(F.col("id").alias("salt"))
+    polys = (
+        polygons_df.select(id_col, burn_col, geom_col)
+        .mapInPandas(
+            polygon_keys,
+            schema="key bigint, poly_id string, burn long, geometry binary",
         )
         .crossJoin(F.broadcast(salts))
     )
 
-    out_cols = list(keep_cols)
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in pairs.select(*out_cols).schema.fields
-    ) + ", poly_id string, burn long"
-
-    def refine(key, cand: pd.DataFrame, geo: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {c: pd.Series(dtype=object) for c in out_cols}
-            | {"poly_id": pd.Series(dtype=object), "burn": pd.Series(dtype="int64")}
+    def refine(p: pd.DataFrame, g: pd.DataFrame) -> pd.DataFrame:
+        out = p[in_cols]
+        if len(p) == 0 or len(g) == 0:
+            return out.assign(poly_id=None)
+        g = g.sort_values("burn", kind="stable")
+        idx = gindex.build_index(
+            list(zip(g["poly_id"], map(bytes, g["geometry"]))), res=res
         )
-        if len(cand) == 0 or len(geo) == 0:
-            return empty
-        parts = gwkb.polygon_parts(gwkb.decode(bytes(geo["geometry"].iloc[0])))
-        x = cand["x"].to_numpy(dtype=np.float64)
-        y = cand["y"].to_numpy(dtype=np.float64)
-        hit = ggeom.points_in_polygon(x, y, parts)
-        if not hit.any():
-            return empty
-        got = cand.loc[hit, out_cols + ["burn"]].copy()
-        got["poly_id"] = key[0]
-        return got[out_cols + ["poly_id", "burn"]]
+        ids = np.array(idx.poly_ids, dtype=object)
+        x = p["x"].to_numpy(dtype=np.float64, na_value=np.nan)
+        y = p["y"].to_numpy(dtype=np.float64, na_value=np.nan)
+        return out.assign(poly_id=_assign_batch(idx, ids, x, y))
 
-    hits = (
-        pairs.groupBy("poly_id", "salt")
-        .cogroup(geoms.groupBy("poly_id", "salt"))
-        .applyInPandas(refine, schema=out_schema)
-    )
-    best = hits.groupBy(*keep_cols).agg(
-        F.max_by("poly_id", "burn").alias("poly_id")
-    )
-    return points.select(*keep_cols, "x", "y").join(
-        best, list(keep_cols), "left"
+    return (
+        pts.groupBy("key", "salt")
+        .cogroup(polys.groupBy("key", "salt"))
+        .applyInPandas(refine, schema=pts_schema + ", poly_id string")
     )

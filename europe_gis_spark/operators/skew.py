@@ -1,18 +1,13 @@
 """Skew handling for dense cells (London/Paris hotspots): frequency-
-sampled salting + adaptive cell splitting (SURVEY.md §4 custom item 2).
+sampled salting (SURVEY.md §4 custom item 2), on top of AQE's skew-join
+splitting (enabled session-wide in session.py).
 
-Two complementary mechanisms on top of AQE's skew-join splitting
-(enabled session-wide in session.py):
-
-  * build-side replicate-and-salt for shuffle equi-joins on ``cell``:
-    sample the probe side's cell frequencies, derive a per-cell salt
-    factor k ∝ frequency, explode the build side k ways and salt the
-    probe side uniformly — classic salted join, with the salt map
-    broadcast (tiny: only hot cells appear).
-  * adaptive cell splitting for the broadcast-PIP path: hot cells are
-    re-indexed at finer resolution inside the PolyIndex
-    (geo.cells.adaptive_cover), so a single city cell stops dominating
-    one task's Arrow batch.
+Build-side replicate-and-salt for shuffle equi-joins on ``cell``: sample
+the probe side's cell frequencies, derive a per-cell salt factor k ∝
+frequency, explode the build side k ways and salt the probe side
+uniformly — classic salted join, with the salt map broadcast (tiny: only
+hot cells appear). The shuffle PIP join salts uniformly instead
+(``geo_join.pip_join_shuffle``).
 
 The reference's analogue is fixed 1000×1000 retiling
 (``/root/reference/scripts/old_files/echo/dem.bat:1``); here the split
@@ -88,26 +83,3 @@ def salted_join(
         .drop("salt_k")
     )
     return p.join(b, [cell_col, "salt"], how).drop("salt")
-
-
-def repartition_by_cell_prefix(
-    df: DataFrame, cell_col: str = "cell", prefix_res: int = 8, n_parts: int | None = None
-) -> DataFrame:
-    """Physical-layout helper: co-locate rows by coarse cell ancestor so
-    downstream cell joins shuffle less (the Iceberg-partitioning analogue
-    of the reference's tile partitioning). Parent extraction is pure bit
-    arithmetic — expressed as JVM-side column ops."""
-    mask = (1 << 29) - 1
-    # prefix = (prefix_res << 58) | (iy >> (res - prefix_res) << 29)
-    #          | (ix >> (res - prefix_res)) — SQL expr because the shift
-    # amount is itself a column (PySpark's helper takes int literals only)
-    shift = f"cast(shiftrightunsigned({cell_col}, 58) - {prefix_res} as int)"
-    parent = (
-        f"shiftleft(cast({prefix_res} as bigint), 58)"
-        f" + shiftleft(shiftrightunsigned(shiftrightunsigned({cell_col}, 29) & {mask}, {shift}), 29)"
-        f" + shiftrightunsigned({cell_col} & {mask}, {shift})"
-    )
-    out = df.withColumn("cell_prefix", F.expr(parent))
-    if n_parts:
-        return out.repartition(n_parts, "cell_prefix")
-    return out.repartition("cell_prefix")

@@ -78,18 +78,6 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _SPREAD_MIN_BYTES = 2 * 1024 * 1024
 
 
-def _input_bytes(path: str) -> int:
-    import os
-
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if not f.startswith((".", "_"))
-        )
-    return os.path.getsize(path)
-
-
 def _read_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """_read + spread across all cores for CPU-heavy map-side work.
 
@@ -104,13 +92,12 @@ def _read_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     SIZE-ADAPTIVE (guide §2: derive partitioning from input size, not a
     constant): below ``_SPREAD_MIN_BYTES`` of compressed input the
     shuffle's fixed cost exceeds the parallelism gain and the plain
-    scan is returned unchanged."""
+    scan is returned unchanged. The size is the scan's own file-index
+    total, so it reads the same on any filesystem Spark can list."""
     df = _read(spark, sf_dir, name)
-    try:
-        if _input_bytes(f"{sf_dir}/{name}.parquet") < _SPREAD_MIN_BYTES:
-            return df
-    except OSError:
-        pass
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size < _SPREAD_MIN_BYTES:
+        return df
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
@@ -820,8 +807,8 @@ def q_incremental_tag(spark, sf_dir):
 
 
 def q_geo_pip_shuffle(spark, sf_dir):
-    """The NO-BROADCAST twin of q_geo_pip: cell-bucketed shuffle hash
-    join (pinned) + salted-cogroup exact PIP refine + last-wins —
+    """The NO-BROADCAST twin of q_geo_pip: points and polygons meet in
+    a (coarse cell, salt) cogroup that probes one PolyIndex per group —
     the LAU-scale path when the polygon side outgrows the broadcast
     budget. Shares q_geo_pip's oracle: both paths must produce
     identical region assignments."""

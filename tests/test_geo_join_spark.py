@@ -176,8 +176,8 @@ def test_multi_match_overlap_counting(spark, level3):
 
 
 def test_shuffle_pip_equals_broadcast_pip(spark, fixture_pages, level3):
-    """pip_join_shuffle (no-broadcast cell-bucketed hash join + salted
-    cogroup refine) must assign every resolvable page to exactly the
+    """pip_join_shuffle (no broadcast: one PolyIndex per salted
+    cell-group cogroup) must assign every resolvable page to exactly the
     same polygon as the broadcast-index path — same burn order, same
     boundary rule — across the full fixture set (hot city cell, border
     points, multi-polygon regions)."""
@@ -204,8 +204,10 @@ def test_shuffle_pip_equals_broadcast_pip(spark, fixture_pages, level3):
 def test_degenerate_batches_keep_every_row_null(spark, level3):
     """Batches with no usable point — NULL or NaN x/y, pages with no
     coordinates and no host hint, zero rows — come back row for row with
-    poly_id NULL through every caller of the shared batch body."""
+    poly_id NULL through every caller of the shared batch body, the
+    shuffle join included."""
     idx = geo_join.build_polygon_index_bc(spark, spark.createDataFrame(level3))
+    burned = spark.createDataFrame(level3.assign(burn=range(len(level3))))
     hints = pgen.host_city_hints()
     nan = float("nan")
     pts = spark.createDataFrame(
@@ -223,6 +225,7 @@ def test_degenerate_batches_keep_every_row_null(spark, level3):
     runs = [
         (pts, lambda df: geo_join.assign_polygons(df, idx, match="last")),
         (pts, lambda df: geo_join.assign_polygons(df, idx, match="all")),
+        (pts, lambda df: geo_join.pip_join_shuffle(df, burned)),
         (pages, lambda df: geo_join.tag_pages(df, idx, host_hints=hints)),
         (pages, lambda df: geo_join.tag_pages(df, idx, with_metrics=True)),
     ]

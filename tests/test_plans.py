@@ -268,19 +268,31 @@ def test_hard_negatives_window_is_group_limited(spark):
 
 
 def test_pip_shuffle_join_never_broadcasts_corpus_sides(spark):
-    """The no-broadcast spatial-join path must stay that way: the
-    candidate-pair join is a SHUFFLED hash join on the cell key (the
-    planner would broadcast the small cover table at test scale —
-    corpus-scale LAU covers are exactly what this path exists to NOT
-    broadcast), and the refine is the salted cogroup
-    (FlatMapCoGroupsInPandas). The only sanctioned broadcast is the
-    n_salt-row salt range on the geometry side."""
+    """The no-broadcast spatial-join path must stay that way, and stay
+    one local join per group: exactly one cogroup
+    (FlatMapCoGroupsInPandas) fed on both sides by a (key, salt) hash
+    exchange; no broadcast hash join, and no broadcast but the
+    ``range(_N_SALT)`` salt table on the polygon side; nothing after the
+    cogroup but the query's own count (last-wins is decided inside each
+    group, so no regroup and no join back)."""
+    import re
+
     from europe_gis_spark.queries import q_geo_pip_shuffle
 
-    df = q_geo_pip_shuffle(spark, "/root/testdata/sf0.001")
-    p = plan_str(df, mode="simple")
-    assert "ShuffledHashJoin [cell" in p.replace("L#", " ").replace("#", " "), p
-    assert "FlatMapCoGroupsInPandas" in p, p
+    p = plan_str(q_geo_pip_shuffle(spark, "/root/testdata/sf0.001"), mode="simple")
+    lines = p.splitlines()
+    cog = [i for i, ln in enumerate(lines) if "FlatMapCoGroupsInPandas" in ln]
+    assert len(cog) == 1, p
+    keyed = re.findall(r"Exchange hashpartitioning\(key#\d+L?, salt#\d+L?, ", p)
+    assert len(keyed) == 2, p
+    assert "BroadcastHashJoin" not in p, p
+    bcast = [i for i, ln in enumerate(lines) if "BroadcastExchange" in ln]
+    assert len(bcast) == 1 and "salt" in lines[bcast[0] + 1], p
+    assert "Range (0, 8," in lines[bcast[0] + 2], p
+    above = lines[: cog[0]]
+    assert not any("Join" in ln for ln in above), p
+    aggs = [ln for ln in above if "Aggregate" in ln]
+    assert aggs and all("keys=[poly_id#" in ln for ln in aggs), p
 
 
 def test_no_query_regresses_to_cartesian_or_row_python(spark):
